@@ -2,9 +2,30 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.sources.{NoForkLocalFileSystem, NoForkLocalFs}
+
 /** Shared session configuration for Verify/Bench/tests. */
 object Sessions {
 
+  /** A local session with the engine's fixed settings.
+    *
+    * `file://` resolves to `graft.sources.NoForkLocalFileSystem` (the
+    * FileSystem API: every sink, `VersionedStore`) and
+    * `graft.sources.NoForkLocalFs` (the FileContext API: streaming
+    * checkpoints and state). Without `libhadoop`, Hadoop's own local file
+    * system forks a `chmod` process for every file, `.crc` side file and
+    * directory a write creates, and a `readlink` for each end of every
+    * FileContext rename. JFR `jdk.ProcessStart` counts on a 4-vCPU host
+    * (perfbench, seed 1): about 263 `chmod` forks per `sparkify_etl` pass
+    * (222 in the songs sink alone), and 172 `chmod` plus 56 `readlink`
+    * forks per `corpus_dedup` pass; with these classes, none. File bytes,
+    * names, `.crc` files and modes are unchanged (`LocalFsSpec`). Hadoop
+    * caches file systems per JVM, so this holds only where no code asked
+    * for `file://` with another configuration before the session. Code
+    * that builds its own `Configuration` (for a private FileSystem
+    * instance on an executor) must start from the session's Hadoop conf,
+    * as `AvroIo` and `qBinarySource` do, or it gets the stock classes.
+    */
   def builder(master: String, shufflePartitions: String): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
@@ -12,6 +33,9 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.hadoop.fs.file.impl", classOf[NoForkLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[NoForkLocalFs].getName)
       // bucketed-table writes (q41) go to a per-process scratch
       // warehouse (concurrent-run safe), deleted at JVM exit
       .config("spark.sql.warehouse.dir", Scratch.register(

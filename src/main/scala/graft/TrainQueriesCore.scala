@@ -2184,13 +2184,15 @@ private[graft] object TrainQueriesCore {
     val driverFs = base.getFileSystem(s.sessionState.newHadoopConf())
     val marker = new org.apache.hadoop.fs.Path(base, "_STAGED")
     if (!driverFs.exists(marker)) {
+      // the session's Hadoop conf, so tasks get its `fs.file.impl`
+      val props = graft.sources.AvroIo.confProps(s.sessionState.newHadoopConf())
       t(s, dir, "documents")
         .select(col("doc_id").cast("string").as("name"),
           col("text").cast("binary").as("payload"))
         .repartition(8)
         .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
           val b = new org.apache.hadoop.fs.Path(out)
-          val conf = new org.apache.hadoop.conf.Configuration()
+          val conf = graft.sources.AvroIo.rebuild(props)
           // a PRIVATE FileSystem instance: FileSystem.get/getFileSystem
           // return the process-cached one, and disabling checksums there
           // would leak to every other Hadoop-FS user in the JVM. Blobs

@@ -77,14 +77,14 @@ object AvroIo {
     * the tasks exactly as they would through a built-in sink; a bare
     * `new Configuration()` on the executor would silently drop them.
     */
-  private def confProps(conf: Configuration): Array[(String, String)] = {
+  private[graft] def confProps(conf: Configuration): Array[(String, String)] = {
     val it = conf.iterator()
     val buf = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     while (it.hasNext) { val e = it.next(); buf += (e.getKey -> e.getValue) }
     buf.toArray
   }
 
-  private def rebuild(props: Array[(String, String)]): Configuration = {
+  private[graft] def rebuild(props: Array[(String, String)]): Configuration = {
     val c = new Configuration(false)
     props.foreach { case (k, v) => c.set(k, v) }
     c
