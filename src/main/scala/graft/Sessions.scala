@@ -25,6 +25,19 @@ object Sessions {
     * that builds its own `Configuration` (for a private FileSystem
     * instance on an executor) must start from the session's Hadoop conf,
     * as `AvroIo` and `qBinarySource` do, or it gets the stock classes.
+    *
+    * File listing always runs on the driver
+    * (`spark.sql.sources.parallelPartitionDiscovery.threshold` is
+    * `Int.MaxValue`). Above the default threshold of 32 paths, Spark
+    * lists with a job of one task per path; every session built here is
+    * `local[N]`, so those tasks would only call `getFileStatus` on task
+    * threads of the same JVM, against the same file system the driver
+    * lists directly. The Sparkify song glob expands to 82 paths in
+    * perfbench's `sparkify_etl`, so each ETL pass started an 82-task
+    * listing job (0.40 s; 82 of a traced pass's 123 tasks); the driver
+    * lists the same paths in about 40 ms. Measured with concurrent
+    * sinks (4 vCPU, seeds 141-142): 0 listing jobs, and 53-57 tasks in
+    * 17-18 jobs per traced pass instead of 123 tasks in 15 jobs.
     */
   def builder(master: String, shufflePartitions: String): SparkSession.Builder =
     SparkSession.builder()
@@ -36,6 +49,8 @@ object Sessions {
       .config("spark.hadoop.fs.file.impl", classOf[NoForkLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
         classOf[NoForkLocalFs].getName)
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+        Int.MaxValue.toString)
       // bucketed-table writes (q41) go to a per-process scratch
       // warehouse (concurrent-run safe), deleted at JVM exit
       .config("spark.sql.warehouse.dir", Scratch.register(

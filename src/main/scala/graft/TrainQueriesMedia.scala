@@ -2873,10 +2873,11 @@ private[graft] object TrainQueriesMedia {
     * per-table row-count summary.
     *
     * The seven legs are INDEPENDENT jobs (disjoint state paths,
-    * disjoint chains), so they run from a small driver pool (guide
-    * §2.6 — overlap independent jobs): each leg's stage tail
-    * back-fills cores the others free, instead of 7 × (stage tail +
-    * commit) strictly in sequence. The pool is sized to the LEG COUNT
+    * disjoint chains), so they run at the same time, one driver thread
+    * per leg (`graft.Parallel.all`; guide §2.6 — overlap independent
+    * jobs): each leg's stage tail back-fills cores the others free,
+    * instead of 7 × (stage tail + commit) strictly in sequence. The
+    * width is the LEG COUNT
     * (all independent jobs in flight): measured r17 at idle
     * sf0.1/32 cores, width 7 runs q322 in 4.69 s vs 7.39 s at the r16
     * width of 4 — once the r17 local-CC fast path shortened each leg,
@@ -2894,45 +2895,34 @@ private[graft] object TrainQueriesMedia {
     * partitions down for their window; a BATCH leg planned during a
     * concurrent refresh may therefore plan at the streaming width.
     * Sound (oracle-proven) and bounded — AQE re-sizes the actual
-    * partitions by bytes either way — but it is why the pool width
+    * partitions by bytes either way — but it is why the width
     * stays small rather than leg-count-wide. Width A/B is recorded in
     * BASELINE.md (r17): 4 measured against 7 at idle sf0.1/32 cores.
     */
   private[graft] def refreshVerdicts(s: SparkSession, dir: String,
       root: String): DataFrame = {
     import s.implicits._
-    val allLegs = verdictLegs(s, dir)
-    val pool =
-      java.util.concurrent.Executors.newFixedThreadPool(allLegs.size)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    try {
-      val legs = allLegs.map { case (name, build) =>
-        scala.concurrent.Future {
-          s.sparkContext.setJobDescription(s"verdict refresh: $name")
-          val path = s"$root/$name"
-          val next =
-            if (!new java.io.File(path).exists()) 0L
-            else s.read.parquet(path)
-              .agg(max(col("version").cast("long"))).head().getLong(0) + 1
-          build().withColumn("version", lit(next))
-            .write.mode("append").partitionBy("version").parquet(path)
-          // metadata-only count of the freshly written partition
-          val n = s.read.parquet(path)
-            .filter(col("version").cast("long") === next).count()
-          (name, n)
-        }
+    graft.Parallel.all(verdictLegs(s, dir).map { case (name, build) =>
+      () => {
+        s.sparkContext.setJobDescription(s"verdict refresh: $name")
+        val path = s"$root/$name"
+        val next =
+          if (!new java.io.File(path).exists()) 0L
+          else s.read.parquet(path)
+            .agg(max(col("version").cast("long"))).head().getLong(0) + 1
+        build().withColumn("version", lit(next))
+          .write.mode("append").partitionBy("version").parquet(path)
+        // metadata-only count of the freshly written partition
+        val n = s.read.parquet(path)
+          .filter(col("version").cast("long") === next).count()
+        (name, n)
       }
-      scala.concurrent.Await
-        .result(scala.concurrent.Future.sequence(legs),
-          scala.concurrent.duration.Duration.Inf)
-        .toDF("table_name", "n_rows").orderBy("table_name")
-    } finally pool.shutdown()
+    }).toDF("table_name", "n_rows").orderBy("table_name")
   }
 
   /** The stored verdict root, built once per session (version 0).
     * The initial refresh runs OUTSIDE the fixture lock: its legs
-    * resolve their own session fixtures from pool threads, which
+    * resolve their own session fixtures from their own threads, which
     * would deadlock against a build-holding-the-lock caller (the
     * lock-holder would be waiting on threads that are waiting on the
     * lock). Queries invoke this from the single harness thread, so

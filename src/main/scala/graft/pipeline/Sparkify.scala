@@ -30,7 +30,12 @@ import graft.ops.{Dedup, TimeOps}
   * catalog when small (Catalyst decides; the projected catalog is 5
   * columns), else sort-merge on the composite key; all sinks are
   * dynamic-partition parquet writes, so downstream reads prune on
-  * year/month (or year/artist_id) directories.
+  * year/month (or year/artist_id) directories. The five sinks are
+  * independent (no sink reads another's output) and run concurrently:
+  * they share only the two cached scans, whose partitions the block
+  * manager still computes once, and a small table's one-task write (the
+  * songs sink) overlaps the other sinks' jobs instead of leaving the
+  * other cores idle.
   */
 object Sparkify {
 
@@ -125,21 +130,29 @@ object Sparkify {
 
   /** Full pipeline: read both inputs once, cache at the fan-out points,
     * write all five tables with the reference's partition layouts
-    * (`etl.py:74,86,120,139,173`).
+    * (`etl.py:74,86,120,139,173`). The five sinks run at the same time
+    * (`graft.Parallel.all`), each labelled `sparkify: <table>` in its
+    * jobs' description; every sink runs to its end even when another
+    * fails, and the first failure is rethrown.
     */
   def run(spark: SparkSession, songPath: String, logPath: String, outDir: String): Unit = {
     val songs = readSongs(spark, songPath).cache()
     val logs = readLogs(spark, logPath).cache()
-    try {
-      songsTable(songs).write.mode("overwrite")
-        .partitionBy("year", "artist_id").parquet(s"$outDir/songs")
-      artistsTable(songs).write.mode("overwrite").parquet(s"$outDir/artists")
-      usersTable(logs).write.mode("overwrite").parquet(s"$outDir/users")
-      timeTable(logs).write.mode("overwrite")
-        .partitionBy("year", "month").parquet(s"$outDir/time")
-      songplaysTable(spark, songs, logs).write.mode("overwrite")
-        .partitionBy("year", "month").parquet(s"$outDir/songplays")
-    } finally {
+    // Each table is built inside its sink's thread: songplaysTable runs
+    // DenseId's jobs when it is called.
+    def sink(table: String, partitionCols: String*)(df: => DataFrame): () => Unit =
+      () => {
+        spark.sparkContext.setJobDescription(s"sparkify: $table")
+        df.write.mode("overwrite").partitionBy(partitionCols: _*)
+          .parquet(s"$outDir/$table")
+      }
+    try graft.Parallel.all(Seq(
+      sink("songs", "year", "artist_id")(songsTable(songs)),
+      sink("artists")(artistsTable(songs)),
+      sink("users")(usersTable(logs)),
+      sink("time", "year", "month")(timeTable(logs)),
+      sink("songplays", "year", "month")(songplaysTable(spark, songs, logs))))
+    finally {
       songs.unpersist(); logs.unpersist()
     }
   }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.hadoop.fs.ParentNotDirectoryException
+import org.apache.spark.JobLog
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.Sparkify
@@ -26,13 +28,18 @@ class SparkifySpec extends AnyFunSuite {
     """{"artist": null, "auth": "Logged In", "firstName": "Lily", "gender": "F", "itemInSession": 1, "lastName": "Koch", "length": null, "level": "free", "location": "Chicago", "method": "GET", "page": "Home", "registration": 1.541048010796E12, "sessionId": 818, "song": null, "status": 200, "ts": 1542837500000, "userAgent": "ua", "userId": "15"}""",
     """{"artist": "Test Artist", "auth": "Logged In", "firstName": "Lily", "gender": "F", "itemInSession": 2, "lastName": "Koch", "length": 200.5, "level": "paid", "location": "Chicago", "method": "PUT", "page": "NextSong", "registration": 1.541048010796E12, "sessionId": 819, "song": "Test Song", "status": 200, "ts": 1542837600000, "userAgent": "ua", "userId": "15"}""")
 
-  test("full pipeline: star schema, FK integrity, partition layout") {
+  private def inputs(prefix: String): String = {
     val dir = Scratch.register(
-      Files.createTempDirectory("graft_sparkify").toFile.getAbsolutePath)
+      Files.createTempDirectory(prefix).toFile.getAbsolutePath)
     Files.write(java.nio.file.Paths.get(s"$dir/songs.json"),
       songJson.mkString("\n").getBytes("UTF-8"))
     Files.write(java.nio.file.Paths.get(s"$dir/logs.json"),
       logJson.mkString("\n").getBytes("UTF-8"))
+    dir
+  }
+
+  test("full pipeline: star schema, FK integrity, partition layout") {
+    val dir = inputs("graft_sparkify")
 
     Sparkify.run(spark, s"$dir/songs.json", s"$dir/logs.json", s"$dir/out")
 
@@ -64,14 +71,36 @@ class SparkifySpec extends AnyFunSuite {
     assert(time.columns.contains("ts"))
   }
 
+  test("every job of a run carries its sink's description, one per table") {
+    val dir = inputs("graft_sparkify_labels")
+    val (_, jobs) = JobLog.of(spark.sparkContext)(
+      Sparkify.run(spark, s"$dir/songs.json", s"$dir/logs.json", s"$dir/out"))
+    val labels = jobs.map(_.prop("spark.job.description"))
+    assert(labels.forall(_.exists(_.startsWith("sparkify: "))), labels)
+    assert(labels.flatten.toSet ===
+      Set("songs", "artists", "users", "time", "songplays")
+        .map(t => s"sparkify: $t"))
+  }
+
+  test("a failing run attempts every sink, rethrows, and leaves no thread") {
+    val dir = inputs("graft_sparkify_fail")
+    val file = s"$dir/not_a_dir"
+    Files.write(java.nio.file.Paths.get(file), Array[Byte](1))
+    def sinkThreads(): Set[Thread] = Thread.getAllStackTraces.keySet
+      .toArray(Array.empty[Thread])
+      .filter(_.getName.startsWith("graft-parallel-")).toSet
+    val before = sinkThreads()
+    // the output root is under a regular file, so all five sinks fail
+    val e = intercept[ParentNotDirectoryException](
+      Sparkify.run(spark, s"$dir/songs.json", s"$dir/logs.json", s"$file/out"))
+    // (Spark attaches a stack-trace marker of its own as suppressed)
+    assert(e.getSuppressed.count(_.isInstanceOf[ParentNotDirectoryException]) === 4)
+    assert((sinkThreads() -- before).isEmpty)
+  }
+
   test("songplay_id is dense 1..N in (ts, session, item) order with " +
       "NO single-task global window (the DenseId scalable form)") {
-    val dir = Scratch.register(
-      Files.createTempDirectory("graft_sparkify_id").toFile.getAbsolutePath)
-    Files.write(java.nio.file.Paths.get(s"$dir/songs.json"),
-      songJson.mkString("\n").getBytes("UTF-8"))
-    Files.write(java.nio.file.Paths.get(s"$dir/logs.json"),
-      logJson.mkString("\n").getBytes("UTF-8"))
+    val dir = inputs("graft_sparkify_id")
     val songs = Sparkify.readSongs(spark, s"$dir/songs.json")
     val logs = Sparkify.readLogs(spark, s"$dir/logs.json")
     val sp = Sparkify.songplaysTable(spark, songs, logs)
