@@ -38,6 +38,33 @@ object Sessions {
     * lists the same paths in about 40 ms. Measured with concurrent
     * sinks (4 vCPU, seeds 141-142): 0 listing jobs, and 53-57 tasks in
     * 17-18 jobs per traced pass instead of 123 tasks in 15 jobs.
+    *
+    * Generated code is reused across streaming runs and passes.
+    * `CodeGenerator` keeps compiled classes in one JVM-wide LRU cache,
+    * keyed by (context class loader, code):
+    *  - `spark.sql.artifact.isolation.enabled` is `false`. With isolation
+    *    on, every job carries its session's artifact state, a task runs
+    *    under a class loader kept per session UUID, and
+    *    `DataStreamWriter.start()` runs each query in a cloned session
+    *    with a new UUID, so each streaming run compiled again every class
+    *    the run before it had compiled. Off, the tasks of all sessions
+    *    share one loader. The engine never calls `addArtifact`, `addJar`
+    *    or `addFile`, so isolation guarded nothing here. Cloned sessions
+    *    (streaming runs, `Dataset.cache`) and `newSession()` inherit it.
+    *  - `spark.sql.codegen.cache.maxEntries` is 1000, not 100. A
+    *    `corpus_dedup` run compiles about 230 distinct classes, and the
+    *    cache evicts within four segments of a quarter of its entries
+    *    each, so at 100 most of a pass's classes were gone before the
+    *    next pass asked for them.
+    * Janino compiles per traced `corpus_dedup` pass (perfbench, seed 1,
+    * 4 vCPU; the JVM's second and third passes): 157 and 157 with
+    * Spark's defaults, 75 and 73 of them in `streaming.neardup_index`;
+    * 42 and 2 with both settings (10 and 0 in that step). Isolation off
+    * alone still left 63-71 in that step (seed 301). Untraced
+    * `pass_s.p50` over 10 paired runs: 15.2 s before, 11.7 s after.
+    * A whole `sparkify_etl` run compiles 77 classes either way.
+    * `SessionsSpec` checks that a streaming run compiles nothing
+    * after the same run and 200 other classes.
     */
   def builder(master: String, shufflePartitions: String): SparkSession.Builder =
     SparkSession.builder()
@@ -51,6 +78,8 @@ object Sessions {
         classOf[NoForkLocalFs].getName)
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
         Int.MaxValue.toString)
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       // bucketed-table writes (q41) go to a per-process scratch
       // warehouse (concurrent-run safe), deleted at JVM exit
       .config("spark.sql.warehouse.dir", Scratch.register(

@@ -39,6 +39,8 @@ import graft.ops.{Dedup, TimeOps}
   */
 object Sparkify {
 
+  private val viewSeq = new java.util.concurrent.atomic.AtomicLong()
+
   def readSongs(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(Schemas.song).option("mode", "PERMISSIVE").json(path)
 
@@ -89,21 +91,29 @@ object Sparkify {
     * equi-join, one leg on exact double equality (`length = duration` —
     * preserved bit-for-bit, never tolerance-matched; SURVEY §2.3 J1).
     * Expressed through the SQL surface over temp views for parity with
-    * the reference (`etl.py:149–169`); `songplay_id` is a deterministic
-    * surrogate key instead of `monotonically_increasing_id()`, assigned
-    * by [[graft.ops.DenseId]] in (ts, session_id, item_in_session)
-    * order — the fact table is the LARGEST table this pipeline writes,
+    * the reference (`etl.py:149–169`), named per call (`log_data_<n>`,
+    * `song_data_<n>`) and dropped once the query is analyzed;
+    * `songplay_id` is a deterministic surrogate key instead of
+    * `monotonically_increasing_id()`, assigned by [[graft.ops.DenseId]]
+    * in (ts, session_id, item_in_session) order — the fact table is the LARGEST table this pipeline writes,
     * so the id must NOT funnel through a single-task global
     * `row_number()` window (the q06-vs-q06b distinction: same dense
     * deterministic ids, range-partitioned count-then-offset assignment
     * instead of one task holding every row).
     */
   def songplaysTable(spark: SparkSession, songData: DataFrame, logData: DataFrame): DataFrame = {
+    // per-call view names: temp views are session-global, so concurrent
+    // calls on one session would otherwise swap each other's inputs
+    val n = viewSeq.incrementAndGet()
+    val (logView, songView) = (s"log_data_$n", s"song_data_$n")
     nextSongEvents(logData)
       .withColumn("start_time", TimeOps.fromEpochMillis(col("ts")))
-      .createOrReplaceTempView("log_data")
-    songData.createOrReplaceTempView("song_data")
-    val joined = spark.sql("""
+      .createOrReplaceTempView(logView)
+    songData.createOrReplaceTempView(songView)
+    // spark.sql analyzes eagerly, so the views can go once it returns;
+    // dropped from the session catalog, because Catalog.dropTempView
+    // would also uncache the caller's cached songData
+    val joined = try spark.sql(s"""
       SELECT ld.ts            AS __ts,
              ld.itemInSession AS __item,
              ld.start_time,
@@ -116,11 +126,12 @@ object Sparkify {
              ld.sessionId AS session_id,
              ld.location  AS location,
              ld.userAgent AS user_agent
-      FROM log_data ld
-      JOIN song_data sd
+      FROM $logView ld
+      JOIN $songView sd
         ON ld.song = sd.title
        AND ld.length = sd.duration
        AND ld.artist = sd.artist_name""")
+    finally Seq(logView, songView).foreach(spark.sessionState.catalog.dropTempView)
     graft.ops.DenseId.withDenseId(joined, "songplay_id",
         col("__ts"), col("session_id"), col("__item"))
       .select("songplay_id", "start_time", "year", "month", "user_id",

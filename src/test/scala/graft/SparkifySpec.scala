@@ -28,13 +28,14 @@ class SparkifySpec extends AnyFunSuite {
     """{"artist": null, "auth": "Logged In", "firstName": "Lily", "gender": "F", "itemInSession": 1, "lastName": "Koch", "length": null, "level": "free", "location": "Chicago", "method": "GET", "page": "Home", "registration": 1.541048010796E12, "sessionId": 818, "song": null, "status": 200, "ts": 1542837500000, "userAgent": "ua", "userId": "15"}""",
     """{"artist": "Test Artist", "auth": "Logged In", "firstName": "Lily", "gender": "F", "itemInSession": 2, "lastName": "Koch", "length": 200.5, "level": "paid", "location": "Chicago", "method": "PUT", "page": "NextSong", "registration": 1.541048010796E12, "sessionId": 819, "song": "Test Song", "status": 200, "ts": 1542837600000, "userAgent": "ua", "userId": "15"}""")
 
-  private def inputs(prefix: String): String = {
+  private def inputs(prefix: String, songs: Seq[String] = songJson,
+      logs: Seq[String] = logJson): String = {
     val dir = Scratch.register(
       Files.createTempDirectory(prefix).toFile.getAbsolutePath)
     Files.write(java.nio.file.Paths.get(s"$dir/songs.json"),
-      songJson.mkString("\n").getBytes("UTF-8"))
+      songs.mkString("\n").getBytes("UTF-8"))
     Files.write(java.nio.file.Paths.get(s"$dir/logs.json"),
-      logJson.mkString("\n").getBytes("UTF-8"))
+      logs.mkString("\n").getBytes("UTF-8"))
     dir
   }
 
@@ -113,6 +114,33 @@ class SparkifySpec extends AnyFunSuite {
     assert(rows.map(_.getLong(0)).toSeq === (1L to rows.length))
     // ts order: session 818's play precedes session 819's
     assert(rows.head.getLong(1) === 818L)
+  }
+
+  test("songplaysTable leaves no view behind, keeps the caller's cache, " +
+      "and concurrent calls each join their own inputs") {
+    val dirA = inputs("graft_sparkify_views_a")
+    val songs = Sparkify.readSongs(spark, s"$dirA/songs.json").cache()
+    val logs = Sparkify.readLogs(spark, s"$dirA/logs.json")
+    Sparkify.songplaysTable(spark, songs, logs)
+    val views = spark.catalog.listTables().collect().map(_.name)
+    assert(!views.exists(v => v.startsWith("log_data") ||
+      v.startsWith("song_data")), views.toSeq)
+    assert(songs.storageLevel.useMemory)
+    songs.unpersist()
+
+    // a second catalog with its own song, played once
+    val dirB = inputs("graft_sparkify_views_b",
+      Seq("""{"num_songs": 1, "artist_id": "AR0000000000000002", "artist_latitude": null, "artist_longitude": null, "artist_location": "", "artist_name": "Other Artist", "song_id": "SO0000000000000002", "title": "Other Song", "duration": 99.25, "year": 1999}"""),
+      Seq("""{"artist": "Other Artist", "auth": "Logged In", "firstName": "Max", "gender": "M", "itemInSession": 0, "lastName": "Roe", "length": 99.25, "level": "free", "location": "Boston", "method": "PUT", "page": "NextSong", "registration": 1.541048010796E12, "sessionId": 900, "song": "Other Song", "status": 200, "ts": 1542837700000, "userAgent": "ua", "userId": "16"}"""))
+    def songIds(dir: String): () => Set[String] = () =>
+      Sparkify.songplaysTable(spark,
+          Sparkify.readSongs(spark, s"$dir/songs.json"),
+          Sparkify.readLogs(spark, s"$dir/logs.json"))
+        .collect().map(_.getAs[String]("song_id")).toSet
+    for (_ <- 1 to 4)
+      assert(Parallel.all(Seq(songIds(dirA), songIds(dirB))) === Seq(
+        Set("SOUPIRU12A6D4FA1E1", "SO0000000000000001"),
+        Set("SO0000000000000002")))
   }
 
   test("S2 literal form: schema inference over logs matches Schemas.logEvent") {
