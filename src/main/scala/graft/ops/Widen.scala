@@ -34,18 +34,24 @@ import org.apache.spark.sql.DataFrame
   */
 object Widen {
 
+  private def cores(df: DataFrame): Int =
+    df.sparkSession.sparkContext.defaultParallelism
+
+  /** The one size guard of the byte-estimated forms: the plan's
+    * estimated size is below `cores × 4 MiB` (the open-cost split
+    * floor), so its scan provably ran at fewer-than-cores tasks.
+    */
+  private def narrow(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes <
+      BigInt(cores(df).toLong * (4L << 20))
+
   /** `df`, repartitioned to the default parallelism when its estimated
     * input size is below `cores × 4 MiB` (the open-cost split floor:
     * smaller inputs provably scanned at fewer-than-cores tasks);
     * unchanged otherwise.
     */
-  def ifNarrow(df: DataFrame): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    val want = sc.defaultParallelism
-    val floor = BigInt(want.toLong * (4L << 20))
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est < floor) df.repartition(want) else df
-  }
+  def ifNarrow(df: DataFrame): DataFrame =
+    if (narrow(df)) df.repartition(cores(df)) else df
 
   /** Keyed form of [[ifNarrow]] for the exchange FEEDING an exploding
     * self-join (banded LSH candidates: KB of band rows in, millions of
@@ -60,13 +66,8 @@ object Widen {
     * narrow; identity at production scale, where the bytes-proxy is
     * honest again.
     */
-  def byKeyIfNarrow(df: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    val want = sc.defaultParallelism
-    val floor = BigInt(want.toLong * (4L << 20))
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est < floor) df.repartition(want, keys: _*) else df
-  }
+  def byKeyIfNarrow(df: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame =
+    if (narrow(df)) df.repartition(cores(df), keys: _*) else df
 
   /** Range form of [[byKeyIfNarrow]] for exact-rank sorts: the
     * adaptive range exchange is AQE-coalesced to a handful of tasks on
@@ -78,14 +79,9 @@ object Widen {
     * percentile offset arithmetic is exact per partition id).
     */
   def byRangeIfNarrow(df: DataFrame,
-      keys: org.apache.spark.sql.Column*): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    val want = sc.defaultParallelism
-    val floor = BigInt(want.toLong * (4L << 20))
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est < floor) df.repartitionByRange(want, keys: _*)
+      keys: org.apache.spark.sql.Column*): DataFrame =
+    if (narrow(df)) df.repartitionByRange(cores(df), keys: _*)
     else df.repartitionByRange(keys: _*)
-  }
 
   /** The keyed-repartition form: many query bodies hash-place docs by
     * id (`repartition(col("doc_id"))`) exactly so the CPU-heavy
@@ -100,14 +96,9 @@ object Widen {
     * keep the adaptive form, which is correct at scale.
     */
   def keyed(df: DataFrame,
-      keys: org.apache.spark.sql.Column*): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    val want = sc.defaultParallelism
-    val floor = BigInt(want.toLong * (4L << 20))
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est < floor) df.repartition(want, keys: _*)
+      keys: org.apache.spark.sql.Column*): DataFrame =
+    if (narrow(df)) df.repartition(cores(df), keys: _*)
     else df.repartition(keys: _*)
-  }
 
   /** `transform`-ready [[keyed]] on the corpus id — the 46
     * `repartition(col("doc_id"))` query-body sites.
@@ -125,8 +116,7 @@ object Widen {
     * scan) and passes through untouched.
     */
   def ifFewPartitions(df: DataFrame): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    val want = sc.defaultParallelism
+    val want = cores(df)
     val have = df.queryExecution.toRdd.getNumPartitions
     if (have * 2 <= want) df.repartition(want) else df
   }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.ops.Packing
 
@@ -36,37 +35,22 @@ object BudgetAdmission {
     */
   def run(spark: SparkSession, docsParquet: String, budget: Long,
       chunks: Int = 3): DataFrame =
-      // the prefix sum is batch-sized; 4 partitions sized to state,
-      // not scan width (the q122 discipline)
-      Staging.withStreamShufflePartitions(spark, n = "4") {
-    val (docs, tag) = Staging.stageSplitAndRead(spark, docsParquet,
-      "graft_budget_in", chunks, orderCols = Seq("doc_id"))
-    val tmp = System.getProperty("java.io.tmpdir")
-    val root = graft.Scratch.register(s"$tmp/graft_budget_state_$tag")
-    val ck = graft.Scratch.register(s"$tmp/graft_budget_ck_$tag")
-    runInto(spark, docs, root, ck, budget)
-    VersionedStore.readAllBelow(spark, s"$root/admitted", Long.MaxValue)
-      .getOrElse(emptyAdmitted(spark))
-      .orderBy("doc_id")
-  }
+    Staging.foldStaged(spark, docsParquet, "budget", chunks,
+        Seq("doc_id"))(runInto(spark, _, _, _, budget)) { root =>
+      VersionedStore.readAllBelow(spark, s"$root/admitted", Long.MaxValue)
+        .getOrElse(emptyAdmitted(spark))
+        .orderBy("doc_id")
+    }
 
   /** The pipeline against a caller-owned state root (`<root>/admitted`
     * append store, `<root>/seen` counter store) and checkpoint — the
-    * restart surface, same contract as
-    * [[IncrementalClusters.runInto]].
+    * restart surface ([[Staging.foldEach]]).
     */
   def runInto(spark: SparkSession, docs: DataFrame, stateRoot: String,
       checkpoint: String, budget: Long): Unit = {
     require(budget > 0L, s"budget must be positive: $budget")
-    val query = docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(spark, stateRoot, batch, batchId, budget)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+    Staging.foldEach(docs, checkpoint)(
+      foldBatch(spark, stateRoot, _, _, budget))
   }
 
   /** One ingest: offset = the stored token total strictly below this
@@ -75,31 +59,29 @@ object BudgetAdmission {
     */
   private def foldBatch(spark: SparkSession, stateRoot: String,
       batch: DataFrame, batchId: Long, budget: Long): Unit = {
-    if (!batch.isEmpty) {
-      val toks = batch
-        .select(col("doc_id"),
-          size(split(col("text"), " ")).cast("long").as("n_tok"))
-        .persist()
-      val offset = VersionedStore
-        .latestBelow(spark, s"$stateRoot/seen", batchId)
-        .map(p => spark.read.parquet(p).head().getLong(0))
-        .getOrElse(0L)
-      val admitted = Packing
-        .withRunningSum(toks, "cum_tok", "n_tok", col("doc_id").asc)
-        .withColumn("cum_tok", col("cum_tok") + lit(offset))
-        .filter(col("cum_tok") - col("n_tok") < budget)
-        .select("doc_id", "n_tok", "cum_tok")
-      VersionedStore.write(admitted, s"$stateRoot/admitted", batchId)
-      // the counter advances by EVERY seen token, admitted or not —
-      // the budget line never moves backward under arrivals that
-      // straddle it (one driver-side long: metadata, not data)
-      val seen = offset + toks.agg(coalesce(sum("n_tok"), lit(0L)))
-        .head().getLong(0)
-      import spark.implicits._
-      VersionedStore.write(Seq(seen).toDF("tok_seen"),
-        s"$stateRoot/seen", batchId)
-      toks.unpersist(blocking = false)
-    }
+    val toks = batch
+      .select(col("doc_id"),
+        size(split(col("text"), " ")).cast("long").as("n_tok"))
+      .persist()
+    val offset = VersionedStore
+      .latestBelow(spark, s"$stateRoot/seen", batchId)
+      .map(p => spark.read.parquet(p).head().getLong(0))
+      .getOrElse(0L)
+    val admitted = Packing
+      .withRunningSum(toks, "cum_tok", "n_tok", col("doc_id").asc)
+      .withColumn("cum_tok", col("cum_tok") + lit(offset))
+      .filter(col("cum_tok") - col("n_tok") < budget)
+      .select("doc_id", "n_tok", "cum_tok")
+    VersionedStore.write(admitted, s"$stateRoot/admitted", batchId)
+    // the counter advances by EVERY seen token, admitted or not —
+    // the budget line never moves backward under arrivals that
+    // straddle it (one driver-side long: metadata, not data)
+    val seen = offset + toks.agg(coalesce(sum("n_tok"), lit(0L)))
+      .head().getLong(0)
+    import spark.implicits._
+    VersionedStore.write(Seq(seen).toDF("tok_seen"),
+      s"$stateRoot/seen", batchId)
+    toks.unpersist(blocking = false)
   }
 
   private def emptyAdmitted(spark: SparkSession): DataFrame =

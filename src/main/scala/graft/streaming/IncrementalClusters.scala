@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.ops.DedupClusters
 
@@ -19,16 +18,9 @@ import graft.ops.DedupClusters
   * components it touches — independent of corpus size.
   *
   * State handling is the production pattern, not sink-side magic:
-  *  - the labeling lives as versioned parquet (`batch-<id>` dirs);
-  *    each micro-batch reads the latest version BELOW its own
-  *    batchId and overwrites only its own — so a replayed batch
-  *    (failure recovery re-executes with the same id and data) reads
-  *    the same predecessor state and rewrites the same output:
-  *    idempotent, exactly like q58/q122's sinks;
-  *  - the stream checkpoint (offsets) and the label versions advance
-  *    together; on restart, Structured Streaming resumes at the first
-  *    uncommitted batch, whose label fold re-reads its predecessor —
-  *    the resume spec drives this through a real stop/restart.
+  * the labeling lives as versioned parquet (`batch-<id>` dirs), and
+  * replay and restart follow [[Staging.foldEach]]'s contract, exactly
+  * like q58/q122's batchId-idempotent sinks.
   *
   * Exactness: min-labels compose across batches (the q128 argument,
   * inductively over the arrival order), so the final labeling is
@@ -55,38 +47,23 @@ object IncrementalClusters {
     */
   def runWithHistory(spark: SparkSession, edgesParquet: String,
       chunks: Int = 3): (DataFrame, String) =
-      // quotient-CC joins are batch-sized; 4 partitions sized to state,
-      // not scan width (the q122 discipline)
-      Staging.withStreamShufflePartitions(spark, n = "4") {
-    val (edges, tag) = Staging.stageSplitAndRead(spark, edgesParquet,
-      "graft_incrcc_in", chunks, orderCols = Seq("id_a", "id_b"))
-    val tmp = System.getProperty("java.io.tmpdir")
-    val labDir = graft.Scratch.register(s"$tmp/graft_incrcc_lab_$tag")
-    val ck = graft.Scratch.register(s"$tmp/graft_incrcc_ck_$tag")
-    runInto(spark, edges, labDir, ck)
-    (DedupClusters.withSizes(
-        currentLabels(spark, labDir).getOrElse(emptyLabels(spark)))
-      .orderBy("doc_id"), labDir)
-  }
+    Staging.foldStaged(spark, edgesParquet, "incrcc", chunks,
+        Seq("id_a", "id_b"))(runInto(spark, _, _, _)) { labDir =>
+      (DedupClusters.withSizes(
+          currentLabels(spark, labDir).getOrElse(emptyLabels(spark)))
+        .orderBy("doc_id"), labDir)
+    }
 
   /** The pipeline against CALLER-OWNED label-store and checkpoint
-    * locations — the restart surface: stop, add files, call again with
-    * the same `labDir`/`checkpoint`, and the stream resumes from the
-    * checkpoint while label folds continue from the stored versions
-    * (StreamIncrClustersSpec drives exactly that).
+    * locations — the restart surface ([[Staging.foldEach]]): stop, add
+    * files, call again with the same `labDir`/`checkpoint`, and the
+    * stream resumes from the checkpoint while label folds continue
+    * from the stored versions (StreamIncrClustersSpec drives exactly
+    * that).
     */
   def runInto(spark: SparkSession, edges: DataFrame, labDir: String,
-      checkpoint: String): Unit = {
-    val query = edges.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(spark, labDir, batch, batchId)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+      checkpoint: String): Unit =
+    Staging.foldEach(edges, checkpoint)(foldBatch(spark, labDir, _, _))
 
   /** One ingest: fold `batch`'s edges into the latest stored labeling
     * strictly below `batchId` and write version `batchId`. Reading
@@ -96,17 +73,15 @@ object IncrementalClusters {
     */
   private def foldBatch(spark: SparkSession, labDir: String,
       batch: DataFrame, batchId: Long): Unit = {
-    if (!batch.isEmpty) {
-      // labels are SNAPSHOT state: each version is the full folded
-      // labeling, so a batch reads the one latest version below its id
-      // (the VersionedStore replay discipline)
-      val prev = VersionedStore.latestBelow(spark, labDir, batchId)
-        .map(p => spark.read.parquet(p))
-        .getOrElse(emptyLabels(spark))
-      VersionedStore.write(
-        DedupClusters.incrementalComponents(prev, batch, "id_a", "id_b"),
-        labDir, batchId)
-    }
+    // labels are SNAPSHOT state: each version is the full folded
+    // labeling, so a batch reads the one latest version below its id
+    // (the VersionedStore replay discipline)
+    val prev = VersionedStore.latestBelow(spark, labDir, batchId)
+      .map(p => spark.read.parquet(p))
+      .getOrElse(emptyLabels(spark))
+    VersionedStore.write(
+      DedupClusters.incrementalComponents(prev, batch, "id_a", "id_b"),
+      labDir, batchId)
   }
 
   /** The current labeling = the highest committed version. */

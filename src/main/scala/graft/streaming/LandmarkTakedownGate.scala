@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.ops.Audio
 
@@ -60,38 +59,26 @@ object LandmarkTakedownGate {
   def run(spark: SparkSession, mediaParquet: String, index: DataFrame,
       voteT: Long, deltaQ: Int, chunks: Int = 3,
       stop: Option[DataFrame] = None): DataFrame =
-      Staging.withStreamShufflePartitions(spark, n = "4") {
-    val (media, tag) = Staging.stageSplitAndRead(spark, mediaParquet,
-      "graft_lmtakedown_in", chunks, orderCols = Seq("doc_id"))
-    val tmp = System.getProperty("java.io.tmpdir")
-    val root = graft.Scratch.register(s"$tmp/graft_lmtd_state_$tag")
-    val ck = graft.Scratch.register(s"$tmp/graft_lmtd_ck_$tag")
-    runInto(spark, media, index, root, ck, voteT, deltaQ, stop)
-    VersionedStore.readAllBelow(spark, s"$root/matches", Long.MaxValue)
-      .getOrElse(emptyMatches(spark))
-      .orderBy("doc_id", "takedown_id")
-  }
+    Staging.foldStaged(spark, mediaParquet, "lmtd", chunks,
+        Seq("doc_id"))(
+        runInto(spark, _, index, _, _, voteT, deltaQ, stop)) { root =>
+      VersionedStore.readAllBelow(spark, s"$root/matches", Long.MaxValue)
+        .getOrElse(emptyMatches(spark))
+        .orderBy("doc_id", "takedown_id")
+    }
 
   /** The pipeline against a caller-owned state root and checkpoint —
-    * the restart surface: committed batches never re-probe,
-    * post-restart arrivals still probe the same stored blocklist.
+    * the restart surface ([[Staging.foldEach]]): post-restart arrivals
+    * still probe the same stored blocklist.
     */
   def runInto(spark: SparkSession, media: DataFrame, index: DataFrame,
       stateRoot: String, checkpoint: String, voteT: Long,
-      deltaQ: Int, stop: Option[DataFrame] = None): Unit = {
-    val query = media.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          VersionedStore.write(
-            batchMatches(spark, batch, index, voteT, deltaQ, stop),
-            s"$stateRoot/matches", batchId)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+      deltaQ: Int, stop: Option[DataFrame] = None): Unit =
+    Staging.foldEach(media, checkpoint) { (batch, batchId) =>
+      VersionedStore.write(
+        batchMatches(spark, batch, index, voteT, deltaQ, stop),
+        s"$stateRoot/matches", batchId)
+    }
 
   /** Hashes carried by more than `maxDf` index rows — the
     * maintenance-time artifact an append job refreshes (q324):

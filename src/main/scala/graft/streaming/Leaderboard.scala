@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming exact top-k leaderboard (SURVEY §2.11 extension) — the
   * deployable form of the E170 bounded top-k: a global "largest k
@@ -30,37 +29,23 @@ object Leaderboard {
     */
   def run(spark: SparkSession, eventsParquet: String, k: Int,
       chunks: Int = 3): DataFrame =
-      // state is k rows; 4 shuffle partitions sized to state, not
-      // scan width (the q122 discipline)
-      Staging.withStreamShufflePartitions(spark, n = "4") {
-    val (events, tag) = Staging.stageSplitAndRead(spark, eventsParquet,
-      "graft_lb_in", chunks)
-    val tmp = System.getProperty("java.io.tmpdir")
-    val root = graft.Scratch.register(s"$tmp/graft_lb_state_$tag")
-    val ck = graft.Scratch.register(s"$tmp/graft_lb_ck_$tag")
-    runInto(spark, events, root, ck, k)
-    VersionedStore.latestBelow(spark, s"$root/top", Long.MaxValue)
-      .map(p => ranked(spark.read.parquet(p)))
-      .getOrElse(emptyTop(spark))
-  }
+    Staging.foldStaged(spark, eventsParquet, "lb", chunks)(
+        runInto(spark, _, _, _, k)) { root =>
+      VersionedStore.latestBelow(spark, s"$root/top", Long.MaxValue)
+        .map(p => ranked(spark.read.parquet(p)))
+        .getOrElse(emptyTop(spark))
+    }
 
   /** The pipeline against a caller-owned state root (`<root>/top`
-    * versioned store) and checkpoint — the restart surface, same
-    * contract as [[BudgetAdmission.runInto]]. `events` needs columns
+    * versioned store) and checkpoint — the restart surface
+    * ([[Staging.foldEach]]). `events` needs columns
     * (event_id, user_id, value).
     */
   def runInto(spark: SparkSession, events: DataFrame, stateRoot: String,
       checkpoint: String, k: Int): Unit = {
     require(k >= 1, s"k must be >= 1: $k")
-    val query = events.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(spark, stateRoot, batch, batchId, k)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+    Staging.foldEach(events, checkpoint)(
+      foldBatch(spark, stateRoot, _, _, k))
   }
 
   /** One ingest: batch top-k ∪ stored top-k → top-k, committed as
@@ -68,20 +53,18 @@ object Leaderboard {
     */
   private def foldBatch(spark: SparkSession, stateRoot: String,
       batch: DataFrame, batchId: Long, k: Int): Unit = {
-    if (!batch.isEmpty) {
-      val scored = batch.select(col("event_id"), col("user_id"),
-        expr("cast(cast(value as decimal(18,2)) * 100 as bigint)")
-          .as("cents"))
-        .orderBy(col("cents").desc, col("event_id")).limit(k)
-      val prev = VersionedStore
-        .latestBelow(spark, s"$stateRoot/top", batchId)
-        .map(p => spark.read.parquet(p)
-          .select("event_id", "user_id", "cents"))
-        .getOrElse(scored.limit(0))
-      val merged = prev.unionByName(scored)
-        .orderBy(col("cents").desc, col("event_id")).limit(k)
-      VersionedStore.write(merged, s"$stateRoot/top", batchId)
-    }
+    val scored = batch.select(col("event_id"), col("user_id"),
+      expr("cast(cast(value as decimal(18,2)) * 100 as bigint)")
+        .as("cents"))
+      .orderBy(col("cents").desc, col("event_id")).limit(k)
+    val prev = VersionedStore
+      .latestBelow(spark, s"$stateRoot/top", batchId)
+      .map(p => spark.read.parquet(p)
+        .select("event_id", "user_id", "cents"))
+      .getOrElse(scored.limit(0))
+    val merged = prev.unionByName(scored)
+      .orderBy(col("cents").desc, col("event_id")).limit(k)
+    VersionedStore.write(merged, s"$stateRoot/top", batchId)
   }
 
   /** Rank the k stored rows. The window is global but its input is

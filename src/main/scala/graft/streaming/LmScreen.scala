@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.ops.CharLm
 
@@ -30,58 +29,41 @@ object LmScreen {
     */
   def run(spark: SparkSession, docsParquet: String, model: DataFrame,
       minAvgQ: Long, chunks: Int = 3): DataFrame =
-      Staging.withStreamShufflePartitions(spark, n = "4") {
-    val (docs, tag) = Staging.stageSplitAndRead(spark, docsParquet,
-      "graft_lmscreen_in", chunks, orderCols = Seq("doc_id"))
-    val tmp = System.getProperty("java.io.tmpdir")
-    val root = graft.Scratch.register(s"$tmp/graft_lmscreen_state_$tag")
-    val ck = graft.Scratch.register(s"$tmp/graft_lmscreen_ck_$tag")
-    runInto(spark, docs, model, minAvgQ, root, ck)
-    VersionedStore.readAllBelow(spark, s"$root/verdicts", Long.MaxValue)
-      .getOrElse(emptyVerdicts(spark))
-      .orderBy("doc_id")
-  }
+    Staging.foldStaged(spark, docsParquet, "lmscreen", chunks,
+        Seq("doc_id"))(runInto(spark, _, model, minAvgQ, _, _)) { root =>
+      VersionedStore.readAllBelow(spark, s"$root/verdicts", Long.MaxValue)
+        .getOrElse(emptyVerdicts(spark))
+        .orderBy("doc_id")
+    }
 
   /** The pipeline against a caller-owned state root
     * (`<root>/verdicts` append store) and checkpoint — the restart
-    * surface, same contract as [[ContaminationScreen.runInto]]:
-    * committed batches never re-screen, post-restart arrivals are
-    * still gated against the stored model.
+    * surface ([[Staging.foldEach]]): post-restart arrivals are still
+    * gated against the stored model.
     */
   def runInto(spark: SparkSession, docs: DataFrame, model: DataFrame,
-      minAvgQ: Long, stateRoot: String, checkpoint: String): Unit = {
-    val query = docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(spark, stateRoot, model, minAvgQ, batch, batchId)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+      minAvgQ: Long, stateRoot: String, checkpoint: String): Unit =
+    Staging.foldEach(docs, checkpoint)(
+      foldBatch(stateRoot, model, minAvgQ, _, _))
 
   /** One ingest: score this batch under the stored model, gate on the
     * threshold, append the verdicts as version `batchId`.
     */
-  private def foldBatch(spark: SparkSession, stateRoot: String,
-      model: DataFrame, minAvgQ: Long, batch: DataFrame,
-      batchId: Long): Unit = {
-    if (!batch.isEmpty) {
-      // a staged chunk is ONE file → a 1-task scan, and the bigram
-      // explode above the scan is CPU-per-byte heavy — widen to core
-      // count when the batch arrives narrow (identity on a production
-      // many-file micro-batch); the NearDupIndex per-batch discipline
-      val wide = graft.ops.Widen.ifFewPartitions(batch)
-      val verdicts = CharLm
-        .score(wide, "doc_id", "text", model)
-        .join(wide.select(col("doc_id"), col("source")), Seq("doc_id"))
-        .select(col("doc_id"), col("source"), col("n_bigrams"),
-          col("avg_q"),
-          when(col("avg_q") >= minAvgQ, lit(1L)).otherwise(lit(0L))
-            .as("admitted"))
-      VersionedStore.write(verdicts, s"$stateRoot/verdicts", batchId)
-    }
+  private def foldBatch(stateRoot: String, model: DataFrame,
+      minAvgQ: Long, batch: DataFrame, batchId: Long): Unit = {
+    // a staged chunk is ONE file → a 1-task scan, and the bigram
+    // explode above the scan is CPU-per-byte heavy — widen to core
+    // count when the batch arrives narrow (identity on a production
+    // many-file micro-batch); the NearDupIndex per-batch discipline
+    val wide = graft.ops.Widen.ifFewPartitions(batch)
+    val verdicts = CharLm
+      .score(wide, "doc_id", "text", model)
+      .join(wide.select(col("doc_id"), col("source")), Seq("doc_id"))
+      .select(col("doc_id"), col("source"), col("n_bigrams"),
+        col("avg_q"),
+        when(col("avg_q") >= minAvgQ, lit(1L)).otherwise(lit(0L))
+          .as("admitted"))
+    VersionedStore.write(verdicts, s"$stateRoot/verdicts", batchId)
   }
 
   private def emptyVerdicts(spark: SparkSession): DataFrame =

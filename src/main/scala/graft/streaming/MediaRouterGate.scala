@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.ops.{Audio, Multimodal, Video}
 
@@ -34,42 +33,29 @@ object MediaRouterGate {
     */
   def run(spark: SparkSession, mediaParquet: String,
       alertUnknownBp: Long, chunks: Int = 3): DataFrame =
-      Staging.withStreamShufflePartitions(spark, n = "4") {
-    val (media, tag) = Staging.stageSplitAndRead(spark, mediaParquet,
-      "graft_mrouter_in", chunks, orderCols = Seq("doc_id"))
-    val tmp = System.getProperty("java.io.tmpdir")
-    val root = graft.Scratch.register(s"$tmp/graft_mrouter_state_$tag")
-    val ck = graft.Scratch.register(s"$tmp/graft_mrouter_ck_$tag")
-    runInto(spark, media, alertUnknownBp, root, ck)
-    VersionedStore.readAllBelow(spark, s"$root/routes", Long.MaxValue)
-      .getOrElse(emptyRoutes(spark))
-      .orderBy("batch_id", "format")
-  }
+    Staging.foldStaged(spark, mediaParquet, "mrouter", chunks,
+        Seq("doc_id"))(runInto(spark, _, alertUnknownBp, _, _)) { root =>
+      VersionedStore.readAllBelow(spark, s"$root/routes", Long.MaxValue)
+        .getOrElse(emptyRoutes(spark))
+        .orderBy("batch_id", "format")
+    }
 
   /** The pipeline against a caller-owned state root and checkpoint —
-    * the restart surface.
+    * the restart surface ([[Staging.foldEach]]).
     */
   def runInto(spark: SparkSession, media: DataFrame, alertUnknownBp: Long,
-      stateRoot: String, checkpoint: String): Unit = {
-    val query = media.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          // widen the one-file staged scan under the per-payload
-          // sniff+decode (identity on a wide batch)
-          VersionedStore.write(
-            batchRouted(graft.ops.Widen.ifFewPartitions(batch),
-              alertUnknownBp)
-              .select(lit(batchId).as("batch_id"), col("format"),
-                col("n_docs"), col("sum_units"), col("unknown_bp"),
-                col("unknown_alert")),
-            s"$stateRoot/routes", batchId)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+      stateRoot: String, checkpoint: String): Unit =
+    Staging.foldEach(media, checkpoint) { (batch, batchId) =>
+      // widen the one-file staged scan under the per-payload
+      // sniff+decode (identity on a wide batch)
+      VersionedStore.write(
+        batchRouted(graft.ops.Widen.ifFewPartitions(batch),
+          alertUnknownBp)
+          .select(lit(batchId).as("batch_id"), col("format"),
+            col("n_docs"), col("sum_units"), col("unknown_bp"),
+            col("unknown_alert")),
+        s"$stateRoot/routes", batchId)
+    }
 
   /** One batch's routed inventory (sans batch id): sniff + routed
     * decode per payload, per-format counts/units, batch-scoped

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.ops.Multimodal
 
@@ -43,71 +42,56 @@ object MediaScreen {
     */
   def run(spark: SparkSession, mediaParquet: String,
       blockedFps: DataFrame, chunks: Int = 3): DataFrame =
-      Staging.withStreamShufflePartitions(spark, n = "4") {
-    val (media, tag) = Staging.stageSplitAndRead(spark, mediaParquet,
-      "graft_mediascreen_in", chunks, orderCols = Seq("doc_id"))
-    val tmp = System.getProperty("java.io.tmpdir")
-    val root = graft.Scratch.register(s"$tmp/graft_mediascreen_state_$tag")
-    val ck = graft.Scratch.register(s"$tmp/graft_mediascreen_ck_$tag")
-    runInto(spark, media, blockedFps, root, ck)
-    VersionedStore.readAllBelow(spark, s"$root/rates", Long.MaxValue)
-      .getOrElse(emptyRates(spark))
-      .orderBy("batch_id")
-  }
+    Staging.foldStaged(spark, mediaParquet, "mediascreen", chunks,
+        Seq("doc_id"))(runInto(spark, _, blockedFps, _, _)) { root =>
+      VersionedStore.readAllBelow(spark, s"$root/rates", Long.MaxValue)
+        .getOrElse(emptyRates(spark))
+        .orderBy("batch_id")
+    }
 
   /** The pipeline against a caller-owned state root and checkpoint —
-    * the restart surface.
+    * the restart surface ([[Staging.foldEach]]).
     */
   def runInto(spark: SparkSession, media: DataFrame, blockedFps: DataFrame,
-      stateRoot: String, checkpoint: String): Unit = {
-    val query = media.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(spark, stateRoot, blockedFps, batch, batchId)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+      stateRoot: String, checkpoint: String): Unit =
+    Staging.foldEach(media, checkpoint)(
+      foldBatch(spark, stateRoot, blockedFps, _, _))
 
   private def foldBatch(spark: SparkSession, stateRoot: String,
       blockedFps: DataFrame, batch: DataFrame, batchId: Long): Unit = {
-    if (!batch.isEmpty) {
-      import spark.implicits._
-      implicit val sp: SparkSession = spark
-      // a staged chunk is ONE file → a 1-task scan, and the decode +
-      // blockhash above it is CPU-per-byte heavy — widen to core count
-      // when the batch arrives narrow (identity on a production
-      // many-file micro-batch); the NearDupIndex per-batch discipline
-      val media = graft.ops.Widen.ifFewPartitions(batch)
-        .select(col("doc_id").cast("long"), col("payload"))
-        .as[(Long, Array[Byte])]
-        .map { case (id, p) => Multimodal.MediaRecord(id, p, "bin") }
-      // band key: 15-bit slice value * 4 + band index, one long
-      val bandsOf = "transform(sequence(0, 3), " +
-        "b -> (shiftright(%s, b * 15) & 32767) * 4 + b)"
-      val fps = Multimodal.blockHash(Multimodal.toRaster(media)).toDF()
-        .select(col("doc_id"), col("fp"))
-      val blBands = blockedFps.select(col("fp").as("bfp"))
-        .dropDuplicates("bfp")
-        .select(col("bfp"), explode(expr(bandsOf.format("bfp"))).as("bk"))
-      val hits = fps
-        .select(col("doc_id"), col("fp"),
-          explode(expr(bandsOf.format("fp"))).as("bk"))
-        .join(broadcast(blBands), Seq("bk"))
-        .filter(expr("bit_count(fp ^ bfp) <= 8"))
-        .select(col("doc_id")).distinct()
-        .withColumn("__hit", lit(1L))
-      val rates = fps
-        .join(hits, Seq("doc_id"), "left")
-        .agg(count(lit(1)).as("n_media"),
-          coalesce(sum("__hit"), lit(0L)).as("n_blocked"))
-        .select(lit(batchId).as("batch_id"), col("n_media"),
-          col("n_blocked"),
-          expr("(n_blocked * 10000L) div n_media").as("blocked_bp"))
-      VersionedStore.write(rates, s"$stateRoot/rates", batchId)
-    }
+    import spark.implicits._
+    implicit val sp: SparkSession = spark
+    // a staged chunk is ONE file → a 1-task scan, and the decode +
+    // blockhash above it is CPU-per-byte heavy — widen to core count
+    // when the batch arrives narrow (identity on a production
+    // many-file micro-batch); the NearDupIndex per-batch discipline
+    val media = graft.ops.Widen.ifFewPartitions(batch)
+      .select(col("doc_id").cast("long"), col("payload"))
+      .as[(Long, Array[Byte])]
+      .map { case (id, p) => Multimodal.MediaRecord(id, p, "bin") }
+    // band key: 15-bit slice value * 4 + band index, one long
+    val bandsOf = "transform(sequence(0, 3), " +
+      "b -> (shiftright(%s, b * 15) & 32767) * 4 + b)"
+    val fps = Multimodal.blockHash(Multimodal.toRaster(media)).toDF()
+      .select(col("doc_id"), col("fp"))
+    val blBands = blockedFps.select(col("fp").as("bfp"))
+      .dropDuplicates("bfp")
+      .select(col("bfp"), explode(expr(bandsOf.format("bfp"))).as("bk"))
+    val hits = fps
+      .select(col("doc_id"), col("fp"),
+        explode(expr(bandsOf.format("fp"))).as("bk"))
+      .join(broadcast(blBands), Seq("bk"))
+      .filter(expr("bit_count(fp ^ bfp) <= 8"))
+      .select(col("doc_id")).distinct()
+      .withColumn("__hit", lit(1L))
+    val rates = fps
+      .join(hits, Seq("doc_id"), "left")
+      .agg(count(lit(1)).as("n_media"),
+        coalesce(sum("__hit"), lit(0L)).as("n_blocked"))
+      .select(lit(batchId).as("batch_id"), col("n_media"),
+        col("n_blocked"),
+        expr("(n_blocked * 10000L) div n_media").as("blocked_bp"))
+    VersionedStore.write(rates, s"$stateRoot/rates", batchId)
   }
 
   private def emptyRates(spark: SparkSession): DataFrame =

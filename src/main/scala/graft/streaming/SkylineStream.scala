@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.ops.Skyline
 
@@ -32,59 +31,41 @@ object SkylineStream {
     */
   def run(spark: SparkSession, docsParquet: String,
       chunks: Int = 3): DataFrame =
-      // state is frontier-sized; 4 shuffle partitions sized to state
-      Staging.withStreamShufflePartitions(spark, n = "4") {
-    val (docs, tag) = Staging.stageSplitAndRead(spark, docsParquet,
-      "graft_sky_in", chunks, orderCols = Seq("doc_id"))
-    val tmp = System.getProperty("java.io.tmpdir")
-    val root = graft.Scratch.register(s"$tmp/graft_sky_state_$tag")
-    val ck = graft.Scratch.register(s"$tmp/graft_sky_ck_$tag")
-    runInto(spark, docs, root, ck)
-    VersionedStore.latestBelow(spark, s"$root/frontier", Long.MaxValue)
-      .map(p => spark.read.parquet(p)
-        .select(col("x").as("n_tok"), col("y").as("uniq_bp"))
-        .orderBy(col("n_tok").desc))
-      .getOrElse(emptyFrontier(spark))
-  }
+    Staging.foldStaged(spark, docsParquet, "sky", chunks, Seq("doc_id"))(
+        runInto(spark, _, _, _)) { root =>
+      VersionedStore.latestBelow(spark, s"$root/frontier", Long.MaxValue)
+        .map(p => spark.read.parquet(p)
+          .select(col("x").as("n_tok"), col("y").as("uniq_bp"))
+          .orderBy(col("n_tok").desc))
+        .getOrElse(emptyFrontier(spark))
+    }
 
   /** The pipeline against a caller-owned state root
     * (`<root>/frontier` versioned store) and checkpoint — the restart
-    * surface, same contract as [[Leaderboard.runInto]]. `docs` needs
-    * a `text` column.
+    * surface ([[Staging.foldEach]]). `docs` needs a `text` column.
     */
   def runInto(spark: SparkSession, docs: DataFrame, stateRoot: String,
-      checkpoint: String): Unit = {
-    val query = docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(spark, stateRoot, batch, batchId)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+      checkpoint: String): Unit =
+    Staging.foldEach(docs, checkpoint)(foldBatch(spark, stateRoot, _, _))
 
   /** One ingest: skyline(batch) merged with the stored frontier via
     * the same sweep, committed as version `batchId`.
     */
   private def foldBatch(spark: SparkSession, stateRoot: String,
       batch: DataFrame, batchId: Long): Unit = {
-    if (!batch.isEmpty) {
-      val m = batch
-        .select(split(col("text"), " ").as("__t"))
-        .select(size(col("__t")).cast("long").as("x"),
-          expr("(cast(size(array_distinct(__t)) as bigint) * 10000)"
-            + " div size(__t)").as("y"))
-      val batchFront = Skyline.skyline2d(m, "x", "y")
-      val prev = VersionedStore
-        .latestBelow(spark, s"$stateRoot/frontier", batchId)
-        .map(p => spark.read.parquet(p).select("x", "y"))
-        .getOrElse(batchFront.limit(0))
-      val merged = Skyline.skyline2d(
-        prev.unionByName(batchFront), "x", "y")
-      VersionedStore.write(merged, s"$stateRoot/frontier", batchId)
-    }
+    val m = batch
+      .select(split(col("text"), " ").as("__t"))
+      .select(size(col("__t")).cast("long").as("x"),
+        expr("(cast(size(array_distinct(__t)) as bigint) * 10000)"
+          + " div size(__t)").as("y"))
+    val batchFront = Skyline.skyline2d(m, "x", "y")
+    val prev = VersionedStore
+      .latestBelow(spark, s"$stateRoot/frontier", batchId)
+      .map(p => spark.read.parquet(p).select("x", "y"))
+      .getOrElse(batchFront.limit(0))
+    val merged = Skyline.skyline2d(
+      prev.unionByName(batchFront), "x", "y")
+    VersionedStore.write(merged, s"$stateRoot/frontier", batchId)
   }
 
   private def emptyFrontier(spark: SparkSession): DataFrame = {

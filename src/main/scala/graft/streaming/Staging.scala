@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.LongType
 
 /** Shared file-stream staging: copy a single parquet file into a fresh
@@ -17,6 +18,10 @@ import org.apache.spark.sql.types.LongType
   * or concurrent streams in one session get distinct staging dirs and
   * distinct memory-sink query names — a second stream can't clobber the
   * data backing the first call's lazily-consumed result.
+  *
+  * It also owns the one fold skeleton the versioned-store gates run
+  * ([[foldStaged]] around [[foldEach]]); each gate supplies only its
+  * fold, its read-back and its empty frame.
   */
 object Staging {
   private val counter = new AtomicLong()
@@ -96,6 +101,15 @@ object Staging {
       }
     }
 
+  // Split-staging dirs are memoized per (session, source, chunks): the
+  // chunked directory is the stream's INPUT — repeated calls (bench
+  // trials) must measure the streaming query, not re-shuffle the same
+  // rows into the same chunk files through the local FS (the q82
+  // arrival-directory discipline). The returned tag stays unique per
+  // call so sink names / output dirs never collide across runs.
+  private val splitCache =
+    scala.collection.mutable.Map.empty[(String, String, Int), String]
+
   /** Multi-batch staging: split the source parquet into `chunks`
     * time-ordered files (ascending modification times, so the file
     * source's default oldest-first ordering replays them in event-time
@@ -110,16 +124,6 @@ object Staging {
     * STAGING input — test scaffolding at fixture scale, not a query
     * plan (production streams arrive pre-chunked by time).
     */
-  /** Split-staging dirs are memoized per (session, source, chunks): the
-    * chunked directory is the stream's INPUT — repeated calls (bench
-    * trials) must measure the streaming query, not re-shuffle the same
-    * rows into the same chunk files through the local FS (the q82
-    * arrival-directory discipline). The returned tag stays unique per
-    * call so sink names / output dirs never collide across runs.
-    */
-  private val splitCache =
-    scala.collection.mutable.Map.empty[(String, String, Int), String]
-
   def stageSplitAndRead(spark: SparkSession, srcParquet: String,
       prefix: String, chunks: Int,
       orderCols: Seq[String] = Seq("ts", "event_id")): (DataFrame, String) = {
@@ -208,4 +212,55 @@ object Staging {
 
     (schemaRead(spark, inDir.toString, maxFilesPerTrigger = None), tag)
   }
+
+  /** The one fold skeleton every versioned-store gate runs: drain `in`
+    * to completion (append mode, `Trigger.AvailableNow`, one job per
+    * micro-batch) and call `fold(batch, batchId)` for each NON-EMPTY
+    * micro-batch only — a staged split can cut an empty chunk.
+    *
+    * The restart contract, shared by every gate's `runInto`:
+    *  - resume: `checkpoint` records the consumed offsets, so a call
+    *    against the same checkpoint starts at the first uncommitted
+    *    batch — committed batches never fold again, and a rerun with
+    *    no new input folds nothing;
+    *  - replay: a batch whose attempt failed re-executes with the same
+    *    id and data. That is safe because every fold reads its
+    *    [[VersionedStore]] state only from versions strictly BELOW its
+    *    own `batchId` and overwrites only version `batchId` — the
+    *    read-below-own-id / overwrite-own-id rule.
+    */
+  def foldEach(in: DataFrame, checkpoint: String)(
+      fold: (DataFrame, Long) => Unit): Unit =
+    in.writeStream
+      .outputMode("append")
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (!batch.isEmpty) fold(batch, batchId)
+      }
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+
+  /** A gate's whole run: stage `src` as `chunks` micro-batches
+    * (prefix `graft_<name>_in`), register the state root
+    * `graft_<name>_state_<tag>` and the checkpoint
+    * `graft_<name>_ck_<tag>`, run `into(staged, stateRoot, checkpoint)`
+    * (the gate's [[foldEach]] restart surface) and return
+    * `result(stateRoot)`, the gate's read-back. Shuffle partitions are
+    * scoped to 4 throughout: every fold's joins are batch-sized, so
+    * they are sized to state, not to scan width (the q122 discipline).
+    */
+  def foldStaged[T](spark: SparkSession, src: String, name: String,
+      chunks: Int, orderCols: Seq[String] = Seq("ts", "event_id"))(
+      into: (DataFrame, String, String) => Unit)(
+      result: String => T): T =
+    withStreamShufflePartitions(spark, n = "4") {
+      val (staged, tag) = stageSplitAndRead(spark, src,
+        s"graft_${name}_in", chunks, orderCols)
+      val tmp = System.getProperty("java.io.tmpdir")
+      val root = graft.Scratch.register(s"$tmp/graft_${name}_state_$tag")
+      val ck = graft.Scratch.register(s"$tmp/graft_${name}_ck_$tag")
+      into(staged, root, ck)
+      result(root)
+    }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.functions.TextFns
 
@@ -32,53 +31,38 @@ object TombstoneScreen {
     */
   def run(spark: SparkSession, docsParquet: String,
       tombstones: DataFrame, chunks: Int = 3): DataFrame =
-      Staging.withStreamShufflePartitions(spark, n = "4") {
-    val (docs, tag) = Staging.stageSplitAndRead(spark, docsParquet,
-      "graft_tombmon_in", chunks, orderCols = Seq("doc_id"))
-    val tmp = System.getProperty("java.io.tmpdir")
-    val root = graft.Scratch.register(s"$tmp/graft_tombmon_state_$tag")
-    val ck = graft.Scratch.register(s"$tmp/graft_tombmon_ck_$tag")
-    runInto(spark, docs, tombstones, root, ck)
-    VersionedStore.readAllBelow(spark, s"$root/rates", Long.MaxValue)
-      .getOrElse(emptyRates(spark))
-      .orderBy("batch_id")
-  }
+    Staging.foldStaged(spark, docsParquet, "tombmon", chunks,
+        Seq("doc_id"))(runInto(spark, _, tombstones, _, _)) { root =>
+      VersionedStore.readAllBelow(spark, s"$root/rates", Long.MaxValue)
+        .getOrElse(emptyRates(spark))
+        .orderBy("batch_id")
+    }
 
   /** The pipeline against a caller-owned state root and checkpoint —
-    * the restart surface.
+    * the restart surface ([[Staging.foldEach]]).
     */
   def runInto(spark: SparkSession, docs: DataFrame, tombstones: DataFrame,
-      stateRoot: String, checkpoint: String): Unit = {
-    val query = docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(spark, stateRoot, tombstones, batch, batchId)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+      stateRoot: String, checkpoint: String): Unit =
+    Staging.foldEach(docs, checkpoint)(
+      foldBatch(spark, stateRoot, tombstones, _, _))
 
   private def foldBatch(spark: SparkSession, stateRoot: String,
       tombstones: DataFrame, batch: DataFrame, batchId: Long): Unit = {
-    if (!batch.isEmpty) {
-      // dropDuplicates before the probe: deletion requests legitimately
-      // repeat content (two requesters, one document), and a duplicated
-      // store fp would multiply matched arrival rows through the left
-      // join, inflating n_docs AND n_blocked. The store stays
-      // request-sized, so the dedup rides inside the broadcast build.
-      val rates = batch
-        .select(TextFns.fingerprint("text").as("fp"))
-        .join(broadcast(tombstones.select(col("fp")).dropDuplicates("fp")
-          .withColumn("__hit", lit(1L))), Seq("fp"), "left")
-        .agg(count(lit(1)).as("n_docs"),
-          coalesce(sum("__hit"), lit(0L)).as("n_blocked"))
-        .select(lit(batchId).as("batch_id"), col("n_docs"),
-          col("n_blocked"),
-          expr("(n_blocked * 10000L) div n_docs").as("blocked_bp"))
-      VersionedStore.write(rates, s"$stateRoot/rates", batchId)
-    }
+    // dropDuplicates before the probe: deletion requests legitimately
+    // repeat content (two requesters, one document), and a duplicated
+    // store fp would multiply matched arrival rows through the left
+    // join, inflating n_docs AND n_blocked. The store stays
+    // request-sized, so the dedup rides inside the broadcast build.
+    val rates = batch
+      .select(TextFns.fingerprint("text").as("fp"))
+      .join(broadcast(tombstones.select(col("fp")).dropDuplicates("fp")
+        .withColumn("__hit", lit(1L))), Seq("fp"), "left")
+      .agg(count(lit(1)).as("n_docs"),
+        coalesce(sum("__hit"), lit(0L)).as("n_blocked"))
+      .select(lit(batchId).as("batch_id"), col("n_docs"),
+        col("n_blocked"),
+        expr("(n_blocked * 10000L) div n_docs").as("blocked_bp"))
+    VersionedStore.write(rates, s"$stateRoot/rates", batchId)
   }
 
   private def emptyRates(spark: SparkSession): DataFrame =

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.ops.Video
 
@@ -62,37 +61,25 @@ object VideoDedupGate {
     */
   def run(spark: SparkSession, mediaParquet: String, index: DataFrame,
       chunks: Int = 3, cutMeanDelta: Int = 48): DataFrame =
-      Staging.withStreamShufflePartitions(spark, n = "4") {
-    val (media, tag) = Staging.stageSplitAndRead(spark, mediaParquet,
-      "graft_videogate_in", chunks, orderCols = Seq("doc_id"))
-    val tmp = System.getProperty("java.io.tmpdir")
-    val root = graft.Scratch.register(s"$tmp/graft_videogate_state_$tag")
-    val ck = graft.Scratch.register(s"$tmp/graft_videogate_ck_$tag")
-    runInto(spark, media, index, root, ck, cutMeanDelta)
-    VersionedStore.readAllBelow(spark, s"$root/matches", Long.MaxValue)
-      .getOrElse(emptyMatches(spark))
-      .orderBy("doc_id", "hist_id")
-  }
+    Staging.foldStaged(spark, mediaParquet, "videogate", chunks,
+        Seq("doc_id"))(
+        runInto(spark, _, index, _, _, cutMeanDelta)) { root =>
+      VersionedStore.readAllBelow(spark, s"$root/matches", Long.MaxValue)
+        .getOrElse(emptyMatches(spark))
+        .orderBy("doc_id", "hist_id")
+    }
 
   /** The pipeline against a caller-owned state root and checkpoint —
-    * the restart surface.
+    * the restart surface ([[Staging.foldEach]]).
     */
   def runInto(spark: SparkSession, media: DataFrame, index: DataFrame,
       stateRoot: String, checkpoint: String,
-      cutMeanDelta: Int = 48): Unit = {
-    val query = media.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          VersionedStore.write(
-            batchMatches(spark, batch, index, cutMeanDelta),
-            s"$stateRoot/matches", batchId)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+      cutMeanDelta: Int = 48): Unit =
+    Staging.foldEach(media, checkpoint) { (batch, batchId) =>
+      VersionedStore.write(
+        batchMatches(spark, batch, index, cutMeanDelta),
+        s"$stateRoot/matches", batchId)
+    }
 
   /** One batch's matches: decode + keyframe-hash scan-locally, exact
     * equality probe, ≥ 2-keyframe vote. Public so specs can assert
