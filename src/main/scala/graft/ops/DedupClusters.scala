@@ -90,22 +90,14 @@ object DedupClusters {
     // both paths, so the output is bit-identical; `rounds` is reported
     // as 0 (no star contraction executed). A corpus-scale edge set
     // takes the distributed loop unchanged.
-    if (allLongIds(cur.df) && cur.count <= localBudgetEdges(edges.sparkSession)) {
-      val reps = localComponents(cur.df.collect().iterator
-        .map(r => (r.getLong(0), r.getLong(1))))
-      Snap.release(cur.rdd)
-      val repRows = new java.util.ArrayList[Row]()
-      reps.foreach(t => repRows.add(Row.fromTuple(t)))
-      val repsDf = edges.sparkSession.createDataFrame(repRows,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("__rep",
-            org.apache.spark.sql.types.LongType, nullable = false))))
-      val labels = nodes.join(repsDf, Seq("node"), "left")
-        .select(col("node"),
-          coalesce(col("__rep"), col("node")).as("cluster_rep"))
-      return (labels, 0)
+    localLabels(cur.df, cur.count, "node", "__rep") match {
+      case Some(reps) =>
+        Snap.release(cur.rdd)
+        val labels = nodes.join(reps, Seq("node"), "left")
+          .select(col("node"),
+            coalesce(col("__rep"), col("node")).as("cluster_rep"))
+        return (labels, 0)
+      case None =>
     }
 
     var prevCount = cur.count
@@ -252,23 +244,9 @@ object DedupClusters {
       if (nMapped == 0L)
         spark.range(0)
           .select(col("id").as("__q"), col("id").as("__qr"))
-      else if (allLongIds(mapped) && nMapped <= localBudgetEdges(spark)) {
-        val edges = mapped.collect().iterator
-          .map(r => (r.getLong(0), r.getLong(1)))
-        val labelRows = new java.util.ArrayList[Row]()
-        localComponents(edges).foreach(t => labelRows.add(Row.fromTuple(t)))
-        // a LocalRelation, deliberately: it carries its REAL size
-        // statistic, so the two label joins below plan as broadcasts
-        // of the quotient labeling instead of shuffling the history
-        spark.createDataFrame(labelRows,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("__q",
-              org.apache.spark.sql.types.LongType, nullable = false),
-            org.apache.spark.sql.types.StructField("__qr",
-              org.apache.spark.sql.types.LongType, nullable = false))))
-      } else
+      else localLabels(mapped, nMapped, "__q", "__qr").getOrElse(
         connectedComponents(mapped, "qa", "qb", maxIter)
-          .select(col("node").as("__q"), col("cluster_rep").as("__qr"))
+          .select(col("node").as("__q"), col("cluster_rep").as("__qr")))
     val updatedHist = lab
       .join(qcc, col("__r") === col("__q"), "left")
       .select(col("__n").as("node"),
@@ -298,13 +276,32 @@ object DedupClusters {
       case _ => 655360L
     })
 
-  /** The local paths must not change output schemas, so they engage
-    * only when both id columns are already LongType (every production
-    * caller).
+  /** The driver-local labelling both fast paths share: when the
+    * two-column edge frame `edges` (already counted: `n` edges) has
+    * LongType ids and fits [[localBudgetEdges]], collect it, solve it
+    * with [[localComponents]] and return the (`nodeCol`, `repCol`)
+    * labels; otherwise None, and the caller runs the distributed loop.
+    * The LongType gate keeps output schemas unchanged (every production
+    * caller has long ids). The result is a LocalRelation, deliberately:
+    * it carries its REAL size statistic, so the label joins downstream
+    * plan as broadcasts instead of shuffling the other side.
     */
-  private def allLongIds(df: DataFrame): Boolean =
-    df.schema.fields
-      .forall(_.dataType == org.apache.spark.sql.types.LongType)
+  private def localLabels(edges: DataFrame, n: Long, nodeCol: String,
+      repCol: String): Option[DataFrame] = {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val spark = edges.sparkSession
+    if (!edges.schema.fields.forall(_.dataType == LongType) ||
+        n > localBudgetEdges(spark)) None
+    else {
+      val rows = new java.util.ArrayList[Row]()
+      localComponents(edges.collect().iterator
+        .map(r => (r.getLong(0), r.getLong(1))))
+        .foreach(t => rows.add(Row.fromTuple(t)))
+      Some(spark.createDataFrame(rows, StructType(Seq(
+        StructField(nodeCol, LongType, nullable = false),
+        StructField(repCol, LongType, nullable = false)))))
+    }
+  }
 
   /** Exact min-label connected components of a driver-sized edge list:
     * union-find where the SMALLER root always becomes the parent, so

@@ -78,16 +78,27 @@ object Similarity {
     val q = queries.filter(col("qn") > 0)
       .select(col(idCol).as("query_id"), col("qv").as("__qva"),
         col("qn").as("__qna"))
+    topKTail(b.crossJoin(broadcast(q)), k)
+  }
+
+  /** The ranking tail every top-k path shares: over candidate pairs
+    * (query_id, __qva, __qna) × (id_b, __qvb, __qnb), drop self-pairs,
+    * score by [[cosine]], keep each query's k best (ties broken by
+    * neighbor id) and return (query_id, rank, neighbor_id, sim) plus
+    * `extra` columns.
+    */
+  private def topKTail(pairs: DataFrame, k: Int,
+      extra: Column*): DataFrame = {
     val w = Window.partitionBy("query_id")
       .orderBy(col("sim").desc, col("id_b").asc)
-    b.crossJoin(broadcast(q))
+    pairs
       .filter(col("query_id") =!= col("id_b"))
       .withColumn("sim",
         cosine(col("__qva"), col("__qvb"), col("__qna"), col("__qnb")))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("id_b").as("neighbor_id"),
-        col("sim"))
+      .select(Seq(col("query_id"), col("rank"),
+        col("id_b").as("neighbor_id"), col("sim")) ++ extra: _*)
   }
 
   /** Plane h's integer weight vector: 2·nibble(md5("h,d")) − 15 per
@@ -147,25 +158,24 @@ object Similarity {
   def lshTopK(prepared: DataFrame, idCol: String, k: Int,
       planes: Int = 0, dims: Int = 64,
       targetBucketSize: Long = 1024L): DataFrame = {
-    val nonZero = prepared.filter(col("qn") > 0)
-    val p = if (planes > 0) planes
-      else autoPlanes(nonZero.count(), targetBucketSize)
-    val withB = nonZero.withColumn("bucket",
-      hyperplaneBucket("qv", p, dims).cast("long"))
+    val withB = bucketed(prepared, planes, dims, targetBucketSize)
     val a = withB.select(col(idCol).as("query_id"), col("qv").as("__qva"),
       col("qn").as("__qna"), col("bucket"))
     val b = withB.select(col(idCol).as("id_b"), col("qv").as("__qvb"),
       col("qn").as("__qnb"), col("bucket"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("id_b").asc)
-    a.join(b, Seq("bucket"))
-      .filter(col("query_id") =!= col("id_b"))
-      .withColumn("sim",
-        cosine(col("__qva"), col("__qvb"), col("__qna"), col("__qnb")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("id_b").as("neighbor_id"),
-        col("sim"), col("bucket"))
+    topKTail(a.join(b, Seq("bucket")), k, col("bucket"))
+  }
+
+  /** The bucketing step of the auto-sized LSH paths: drop zero-norm
+    * vectors, resolve the plane count (`planes ≤ 0` sizes it from the
+    * filtered count via [[autoPlanes]]) and attach the long `bucket`.
+    */
+  private def bucketed(prepared: DataFrame, planes: Int, dims: Int,
+      targetBucketSize: Long): DataFrame = {
+    val nonZero = prepared.filter(col("qn") > 0)
+    val p = if (planes > 0) planes
+      else autoPlanes(nonZero.count(), targetBucketSize)
+    nonZero.withColumn("bucket", hyperplaneBucket("qv", p, dims).cast("long"))
   }
 
   /** Multi-probe LSH ANN: each query probes its own bucket PLUS every
@@ -192,16 +202,7 @@ object Similarity {
         col("qn").as("__qna"), explode(expr(probeList)).as("bucket"))
     val b = withB.select(col(idCol).as("id_b"), col("qv").as("__qvb"),
       col("qn").as("__qnb"), col("bucket"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("id_b").asc)
-    a.join(b, Seq("bucket"))
-      .filter(col("query_id") =!= col("id_b"))
-      .withColumn("sim",
-        cosine(col("__qva"), col("__qvb"), col("__qna"), col("__qnb")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("id_b").as("neighbor_id"),
-        col("sim"))
+    topKTail(a.join(b, Seq("bucket")), k)
   }
 
   /** Embedding-cosine near-duplicate pairs: all pairs within the same
@@ -211,11 +212,7 @@ object Similarity {
   def cosineNearDupPairs(prepared: DataFrame, idCol: String,
       threshold: Double, planes: Int = 0, dims: Int = 64,
       targetBucketSize: Long = 1024L): DataFrame = {
-    val nonZero = prepared.filter(col("qn") > 0)
-    val p = if (planes > 0) planes
-      else autoPlanes(nonZero.count(), targetBucketSize)
-    val withB = nonZero.withColumn("bucket",
-      hyperplaneBucket("qv", p, dims).cast("long"))
+    val withB = bucketed(prepared, planes, dims, targetBucketSize)
     val a = withB.select(col(idCol).as("id_a"), col("qv").as("__qva"),
       col("qn").as("__qna"), col("bucket"))
     val b = withB.select(col(idCol).as("id_b"), col("qv").as("__qvb"),

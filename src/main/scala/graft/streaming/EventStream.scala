@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Structured Streaming surface (SURVEY §2.10 — extension beyond the
   * batch-only reference): file-source stream → event-time tumbling-window
@@ -34,22 +33,13 @@ object EventStream {
       prefix: String, window: String, watermark: Option[String],
       mode: String, agg: org.apache.spark.sql.Column): DataFrame =
       Staging.withStreamShufflePartitions(spark) {
-    val (events, tag) = Staging.stageAndRead(spark, srcParquet,
-      s"${prefix}_in")
-    val qn = s"${prefix}_$tag"
+    val (events, tag) = Staging.stageSplitAndRead(spark, srcParquet,
+      s"${prefix}_in", chunks = 1)
     val watermarked = watermark.fold(events)(d => events.withWatermark("ts", d))
-    val query = watermarked
+    val sunk = Staging.toMemory(watermarked
       .groupBy(org.apache.spark.sql.functions.window(col("ts"), window),
         col("event_type"))
-      .agg(agg)
-      .writeStream
-      .outputMode(mode)
-      .format("memory")
-      .queryName(qn)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    val sunk = spark.table(qn)
+      .agg(agg), mode, s"${prefix}_$tag")
     val aggName = sunk.columns(2)
     sunk.select(unix_millis(col("window.start")).as("window_start_ms"),
         col("event_type"), col(aggName))
@@ -57,7 +47,7 @@ object EventStream {
   }
 
   /** Windowed counts per event_type over a parquet-file stream, run to
-    * completion with Trigger.AvailableNow.
+    * completion ([[Staging.toMemory]]).
     */
   def windowedCounts(spark: SparkSession, srcParquet: String,
       window: String = "10 minutes",
@@ -81,21 +71,12 @@ object EventStream {
       gap: String = "30 minutes",
       delay: String = "1 hour"): DataFrame =
       Staging.withStreamShufflePartitions(spark) {
-    val (events, tag) = Staging.stageAndRead(spark, srcParquet,
-      "graft_sesswin_in")
-    val qn = s"graft_sesswin_$tag"
-    val query = events
+    val (events, tag) = Staging.stageSplitAndRead(spark, srcParquet,
+      "graft_sesswin_in", chunks = 1)
+    Staging.toMemory(events
       .withWatermark("ts", delay)
       .groupBy(session_window(col("ts"), gap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(qn)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    spark.table(qn)
+      .agg(count(lit(1)).as("n_events")), "append", s"graft_sesswin_$tag")
       .select(unix_millis(col("session_window.start"))
           .as("session_start_ms"),
         col("user_id"), col("n_events"))
@@ -116,8 +97,8 @@ object EventStream {
       lag: String = "10 minutes",
       delay: String = "30 minutes"): DataFrame =
       Staging.withStreamShufflePartitions(spark) {
-    val (events, tag) = Staging.stageAndRead(spark, srcParquet,
-      "graft_ssj_in")
+    val (events, tag) = Staging.stageSplitAndRead(spark, srcParquet,
+      "graft_ssj_in", chunks = 1)
     val clicks = events.filter(col("event_type") === "click")
       .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
         col("ts").as("c_ts"))
@@ -126,21 +107,14 @@ object EventStream {
       .select(col("user_id").as("p_user"),
         col("event_id").as("purchase_id"), col("ts").as("p_ts"))
       .withWatermark("p_ts", delay)
-    val qn = s"graft_ssj_$tag"
-    val query = clicks
+    Staging.toMemory(clicks
       .join(purchases, expr(
         s"""c_user = p_user AND p_ts >= c_ts
            |AND p_ts <= c_ts + interval $lag""".stripMargin))
       .select(col("click_id"), col("purchase_id"),
-        (unix_millis(col("p_ts")) - unix_millis(col("c_ts"))).as("lag_ms"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(qn)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    spark.table(qn).orderBy("click_id", "purchase_id")
+        (unix_millis(col("p_ts")) - unix_millis(col("c_ts"))).as("lag_ms")),
+      "append", s"graft_ssj_$tag")
+      .orderBy("click_id", "purchase_id")
   }
 
   /** The same windowed aggregation as [[windowedCounts]], delivered
@@ -156,32 +130,20 @@ object EventStream {
       window: String = "10 minutes",
       delay: String = "1 hour"): DataFrame =
       Staging.withStreamShufflePartitions(spark) {
-    val (events, tag) = Staging.stageAndRead(spark, srcParquet,
-      "graft_fbsink_in")
-    val outDir = graft.Scratch.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_fbsink_out_$tag")
-    val query = events
-      .withWatermark("ts", delay)
-      .groupBy(org.apache.spark.sql.functions.window(col("ts"), window),
-        col("event_type"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(unix_millis(col("window.start")).as("window_start_ms"),
-        col("event_type"), col("n_events"))
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    val (events, tag) = Staging.stageSplitAndRead(spark, srcParquet,
+      "graft_fbsink_in", chunks = 1)
+    val tmp = System.getProperty("java.io.tmpdir")
+    val outDir = graft.Scratch.register(s"$tmp/graft_fbsink_out_$tag")
+    Staging.foldEach(windowCounts(events, window, delay),
+        graft.Scratch.register(s"$tmp/graft_fbsink_ck_$tag")) {
+      (batch, batchId) =>
         // overwrite keyed on batchId = idempotence under micro-batch
         // retry (Structured Streaming replays a batch with the same id
         // and the same data after a failure)
-        if (!batch.isEmpty) {
-          batch.write.mode("overwrite").parquet(s"$outDir/batch-$batchId")
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+        batch.write.mode("overwrite").parquet(s"$outDir/batch-$batchId")
+    }
     // a stream whose event-time span closes no window writes no batch
-    // (the foreachBatch guard skips empties) → no directory exists; the
+    // (foldEach skips empty batches) → no directory exists; the
     // batch equivalence demands an empty result, not a read failure.
     // Existence is checked through the session's Hadoop filesystem —
     // the SAME resolution the writer used — not java.io.File, which
@@ -195,13 +157,8 @@ object EventStream {
     else
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("window_start_ms",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("event_type",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("n_events",
-            org.apache.spark.sql.types.LongType))))
+        org.apache.spark.sql.types.StructType.fromDDL(
+          "window_start_ms BIGINT, event_type STRING, n_events BIGINT"))
   }
 
   /** Streaming exact dedup: distinct (user_id, event_type) pairs over
@@ -212,23 +169,15 @@ object EventStream {
     * time bounds, `dropDuplicatesWithinWatermark` caps it for unbounded
     * key spaces.
     */
-  def streamDedup(spark: SparkSession, srcParquet: String,
-      rocksDb: Boolean = false): DataFrame =
-      Staging.withStreamShufflePartitions(spark, rocksDb = rocksDb) {
-    val (events, tag) = Staging.stageAndRead(spark, srcParquet,
-      "graft_dedup_in")
-    val qn = s"graft_dedup_$tag"
-    val query = events
+  def streamDedup(spark: SparkSession, srcParquet: String): DataFrame =
+      Staging.withStreamShufflePartitions(spark) {
+    val (events, tag) = Staging.stageSplitAndRead(spark, srcParquet,
+      "graft_dedup_in", chunks = 1)
+    Staging.toMemory(events
       .select("user_id", "event_type")
-      .dropDuplicates("user_id", "event_type")
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(qn)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    spark.table(qn).orderBy("user_id", "event_type")
+      .dropDuplicates("user_id", "event_type"),
+      "append", s"graft_dedup_$tag")
+      .orderBy("user_id", "event_type")
   }
 
   /** Complete-mode windowed aggregation — the third output mode,
@@ -266,45 +215,44 @@ object EventStream {
     * (idempotent per-batch overwrite, the q58 discipline), and the
     * read-back keeps the LATEST batch's value per key via one
     * `max(struct(batch_id, value))` partial-aggregated shuffle — no
-    * window, no per-key sort. Runs over [[Staging.stageSplitAndRead]]
+    * window, no per-key sort. Runs over [[Staging.foldStaged]]
     * multi-batch staging: with one batch, update-mode semantics are
     * unobservable (every row is trivially "changed once").
     */
   def windowedCountsUpdate(spark: SparkSession, srcParquet: String,
       window: String = "10 minutes", delay: String = "1 hour",
       chunks: Int = 3): DataFrame =
-      // partitions sized to state (windows × types, thousands of keys):
-      // each micro-batch commits one store per partition, and this
-      // query multiplies that by `chunks` batches
-      Staging.withStreamShufflePartitions(spark, n = "4") {
-    val (events, tag) = Staging.stageSplitAndRead(spark, srcParquet,
-      "graft_upd_in", chunks)
-    val outDir = graft.Scratch.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_upd_out_$tag")
-    val query = events
+    // foldStaged's 4 shuffle partitions are sized to state (windows ×
+    // types, thousands of keys): each micro-batch commits one store per
+    // partition, and this query multiplies that by `chunks` batches
+    Staging.foldStaged(spark, srcParquet, "upd", chunks) {
+      (events, outDir, checkpoint) =>
+        Staging.foldEach(windowCounts(events, window, delay), checkpoint,
+            "update") { (batch, batchId) =>
+          batch.withColumn("__batch_id", lit(batchId))
+            .write.mode("overwrite").parquet(s"$outDir/batch-$batchId")
+        }
+    } { outDir =>
+      spark.read.option("recursiveFileLookup", "true").parquet(outDir)
+        .groupBy("window_start_ms", "event_type")
+        .agg(max(struct(col("__batch_id"), col("n_events")))
+          .getField("n_events").as("n_events"))
+        .orderBy("window_start_ms", "event_type")
+    }
+
+  /** (window_start_ms, event_type, n_events) per `window` under a
+    * `delay` watermark: what the two `foreachBatch` sinks
+    * ([[windowedCountsToParquet]], [[windowedCountsUpdate]]) write.
+    */
+  private def windowCounts(events: DataFrame, window: String,
+      delay: String): DataFrame =
+    events
       .withWatermark("ts", delay)
       .groupBy(org.apache.spark.sql.functions.window(col("ts"), window),
         col("event_type"))
       .agg(count(lit(1)).as("n_events"))
       .select(unix_millis(col("window.start")).as("window_start_ms"),
         col("event_type"), col("n_events"))
-      .writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          batch.withColumn("__batch_id", lit(batchId))
-            .write.mode("overwrite").parquet(s"$outDir/batch-$batchId")
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    spark.read.option("recursiveFileLookup", "true").parquet(outDir)
-      .groupBy("window_start_ms", "event_type")
-      .agg(max(struct(col("__batch_id"), col("n_events")))
-        .getField("n_events").as("n_events"))
-      .orderBy("window_start_ms", "event_type")
-  }
 
   /** LEFT OUTER stream-stream interval join — the semantics
     * [[clickAttribution]]'s inner form cannot express: every click
@@ -340,21 +288,14 @@ object EventStream {
       .select(col("user_id").as("p_user"),
         col("event_id").as("purchase_id"), col("ts").as("p_ts"))
       .withWatermark("p_ts", delay)
-    val qn = s"graft_ssjo_$tag"
-    val query = clicks
+    Staging.toMemory(clicks
       .join(purchases, expr(
         s"""c_user = p_user AND p_ts >= c_ts
            |AND p_ts <= c_ts + interval $lag""".stripMargin), "leftOuter")
       .select(col("click_id"), col("purchase_id"),
-        (unix_millis(col("p_ts")) - unix_millis(col("c_ts"))).as("lag_ms"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(qn)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    spark.table(qn).orderBy("click_id", "purchase_id")
+        (unix_millis(col("p_ts")) - unix_millis(col("c_ts"))).as("lag_ms")),
+      "append", s"graft_ssjo_$tag")
+      .orderBy("click_id", "purchase_id")
   }
 
   /** Sketch aggregation under streaming state: windowed
@@ -397,26 +338,17 @@ object EventStream {
       dimParquet: String, window: String = "10 minutes",
       delay: String = "1 hour"): DataFrame =
       Staging.withStreamShufflePartitions(spark) {
-    val (events, tag) = Staging.stageAndRead(spark, srcParquet,
-      "graft_sst_in")
+    val (events, tag) = Staging.stageSplitAndRead(spark, srcParquet,
+      "graft_sst_in", chunks = 1)
     val dim = broadcast(spark.read.parquet(dimParquet)
       .select(col("c_custkey").as("user_id"),
         col("c_mktsegment").as("segment")))
-    val qn = s"graft_sst_$tag"
-    val query = events
+    Staging.toMemory(events
       .withWatermark("ts", delay)
       .join(dim, Seq("user_id"))
       .groupBy(org.apache.spark.sql.functions.window(col("ts"), window),
         col("segment"))
-      .agg(count(lit(1)).as("n_events"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(qn)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    spark.table(qn)
+      .agg(count(lit(1)).as("n_events")), "append", s"graft_sst_$tag")
       .select(unix_millis(col("window.start")).as("window_start_ms"),
         col("segment"), col("n_events"))
       .orderBy("window_start_ms", "segment")

@@ -3,16 +3,19 @@ package graft.streaming
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.LongType
 
-/** Shared file-stream staging: copy a single parquet file into a fresh
-  * stream-input directory (file sources watch directories) and open a
-  * schema'd readStream over it, with the corpus' nanos-long `ts`
-  * normalized to a microsecond TimestampType exactly as the batch
-  * loader does (graft.Tables).
+/** Every streaming query in the engine starts here. [[stageSplitAndRead]]
+  * is the one staging path: it cuts a parquet file into time-ordered
+  * chunks in a fresh stream-input directory (file sources watch
+  * directories) and opens a schema'd readStream over it, with the
+  * corpus' nanos-long `ts` normalized to a microsecond TimestampType
+  * exactly as the batch loader does (graft.Tables). One private
+  * `drain` is the one run path: [[foldEach]] (a `foreachBatch` fold)
+  * and [[toMemory]] (a memory sink) both run on it.
   *
   * The returned tag is unique per *call* (appId + counter), so repeated
   * or concurrent streams in one session get distinct staging dirs and
@@ -31,18 +34,15 @@ object Staging {
     * MEMORY; at 100 TB/day the state store is the first thing that
     * falls over, and the production answer is the spillable
     * RocksDB-backed store — same semantics, state held off-heap/on-disk
-    * with incremental checkpointing.
+    * with incremental checkpointing. A session selects it through
+    * `spark.sql.streaming.stateStore.providerClass`; StagingRocksDbSpec
+    * proves the stream-dedup query's rows identical on both stores.
     */
   val RocksDbProvider: String =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-
   /** Run a streaming query body with `spark.sql.shuffle.partitions`
-    * scoped down to `n` (default 8), restoring the previous value after;
-    * with `rocksDb = true` the state-store provider is also scoped to
-    * [[RocksDbProvider]] for the body (results must be identical —
-    * StagingRocksDbSpec proves it on the stream-dedup query).
+    * scoped down to `n` (default 8), restoring the previous value after.
     *
     * Why the partition scoping: every stateful streaming operator
     * instantiates one state store PER shuffle partition PER stateful
@@ -53,9 +53,9 @@ object Staging {
     * at first run, so sizing it to expected state volume (not to batch
     * scan width) is the correct call, made explicit here.
     */
-  def withStreamShufflePartitions[T](spark: SparkSession, n: String = "8",
-      rocksDb: Boolean = false)(f: => T): T = {
-    enterScopedConf(spark, n, rocksDb)
+  def withStreamShufflePartitions[T](spark: SparkSession, n: String = "8")(
+      f: => T): T = {
+    enterScopedConf(spark, n)
     try f finally exitScopedConf(spark)
   }
 
@@ -72,20 +72,17 @@ object Staging {
     * state-store sizing and results never depend on the partition
     * count (the oracle gate proves that across cpu counts).
     */
-  private final case class ScopedConf(var depth: Int, saved: String,
-    savedProvider: Option[String])
+  private final case class ScopedConf(var depth: Int, saved: String)
   private val scopedConf =
     scala.collection.mutable.Map.empty[SparkSession, ScopedConf]
 
-  private def enterScopedConf(spark: SparkSession, n: String,
-      rocksDb: Boolean): Unit = scopedConf.synchronized {
-    val st = scopedConf.getOrElseUpdate(spark, ScopedConf(0,
-      spark.conf.get("spark.sql.shuffle.partitions"),
-      spark.conf.getOption(ProviderKey)))
-    st.depth += 1
-    spark.conf.set("spark.sql.shuffle.partitions", n)
-    if (rocksDb) spark.conf.set(ProviderKey, RocksDbProvider)
-  }
+  private def enterScopedConf(spark: SparkSession, n: String): Unit =
+    scopedConf.synchronized {
+      val st = scopedConf.getOrElseUpdate(spark,
+        ScopedConf(0, spark.conf.get("spark.sql.shuffle.partitions")))
+      st.depth += 1
+      spark.conf.set("spark.sql.shuffle.partitions", n)
+    }
 
   private def exitScopedConf(spark: SparkSession): Unit =
     scopedConf.synchronized {
@@ -94,10 +91,6 @@ object Staging {
       if (st.depth == 0) {
         scopedConf.remove(spark)
         spark.conf.set("spark.sql.shuffle.partitions", st.saved)
-        st.savedProvider match {
-          case Some(v) => spark.conf.set(ProviderKey, v)
-          case None => spark.conf.unset(ProviderKey)
-        }
       }
     }
 
@@ -110,15 +103,17 @@ object Staging {
   private val splitCache =
     scala.collection.mutable.Map.empty[(String, String, Int), String]
 
-  /** Multi-batch staging: split the source parquet into `chunks`
+  /** The one staging path: split the source parquet into `chunks`
     * time-ordered files (ascending modification times, so the file
     * source's default oldest-first ordering replays them in event-time
     * order) and open a `maxFilesPerTrigger=1` readStream — each chunk
     * becomes its own micro-batch with the watermark ADVANCING between
     * batches. This is what makes update-mode emissions and outer-join
-    * null flushes observable at all: with single-file staging every
-    * stream degenerates to one batch and those semantics collapse to
-    * the batch answer.
+    * null flushes observable at all; `chunks = 1` is the one-batch
+    * stream, whose result is the batch answer restricted by the final
+    * watermark. One chunk of a single parquet file is that file,
+    * copied as is: no sort and no Spark job, so `orderCols` need not
+    * be columns of it.
     *
     * The ntile window used to cut chunks is single-task over the
     * STAGING input — test scaffolding at fixture scale, not a query
@@ -147,51 +142,55 @@ object Staging {
         val inDir = Paths.get(
           graft.Scratch.register(s"$tmp/${prefix}_split_$tag"))
         Files.createDirectories(inDir)
-        val raw = spark.read.parquet(srcParquet)
-        // single-task window over the staging input — test scaffolding
-        // at fixture scale (production streams arrive pre-chunked);
-        // persist()ed so the per-chunk filters below don't re-run the
-        // scan + global sort once per chunk (persist, not
-        // localCheckpoint: Dataset.unpersist then actually releases
-        // the blocks — a checkpoint's pinned RDD is not reachable
-        // through Dataset.rdd, so "unpersisting" it would be a no-op)
-        val w = org.apache.spark.sql.expressions.Window
-          .orderBy(orderCols.map(col): _*)
-        val chunked = raw.withColumn("__c", ntile(chunks).over(w))
-          .persist()
-        for (i <- 1 to chunks) {
-          val chunkDir =
-            graft.Scratch.register(s"$tmp/${prefix}_${tag}_c$i")
-          chunked.filter(col("__c") === i).drop("__c")
-            .coalesce(1).write.mode("overwrite").parquet(chunkDir)
-          val ds = Files.newDirectoryStream(Paths.get(chunkDir),
-            "part-*.parquet")
-          val found = try ds.iterator().next() finally ds.close()
-          val dest = inDir.resolve(f"chunk-$i%03d.parquet")
-          Files.copy(found, dest, StandardCopyOption.REPLACE_EXISTING)
-          Files.setLastModifiedTime(dest,
-            java.nio.file.attribute.FileTime
-              .fromMillis(1000000000000L + i * 1000L))
+        val src = Paths.get(srcParquet)
+        if (chunks == 1 && Files.isRegularFile(src))
+          Files.copy(src, inDir.resolve("chunk-001.parquet"),
+            StandardCopyOption.REPLACE_EXISTING)
+        else {
+          val raw = spark.read.parquet(srcParquet)
+          // single-task window over the staging input — test scaffolding
+          // at fixture scale (production streams arrive pre-chunked);
+          // persist()ed so the per-chunk filters below don't re-run the
+          // scan + global sort once per chunk (persist, not
+          // localCheckpoint: Dataset.unpersist then actually releases
+          // the blocks — a checkpoint's pinned RDD is not reachable
+          // through Dataset.rdd, so "unpersisting" it would be a no-op)
+          val w = org.apache.spark.sql.expressions.Window
+            .orderBy(orderCols.map(col): _*)
+          val chunked = raw.withColumn("__c", ntile(chunks).over(w))
+            .persist()
+          for (i <- 1 to chunks) {
+            val chunkDir =
+              graft.Scratch.register(s"$tmp/${prefix}_${tag}_c$i")
+            chunked.filter(col("__c") === i).drop("__c")
+              .coalesce(1).write.mode("overwrite").parquet(chunkDir)
+            val ds = Files.newDirectoryStream(Paths.get(chunkDir),
+              "part-*.parquet")
+            val found = try ds.iterator().next() finally ds.close()
+            val dest = inDir.resolve(f"chunk-$i%03d.parquet")
+            Files.copy(found, dest, StandardCopyOption.REPLACE_EXISTING)
+            Files.setLastModifiedTime(dest,
+              java.nio.file.attribute.FileTime
+                .fromMillis(1000000000000L + i * 1000L))
+          }
+          chunked.unpersist(blocking = false)
         }
-        chunked.unpersist(blocking = false)
         inDir.toString
       })
     }
-    (schemaRead(spark, inDirStr, maxFilesPerTrigger = Some("1")), tag)
+    (schemaRead(spark, inDirStr), tag)
   }
 
-  /** Shared tail of both staging paths: derive the stream schema from a
-    * batch footer read of the staged dir, open the readStream, and
-    * normalize the corpus' nanos-long `ts` to a microsecond
-    * TimestampType exactly as the batch loader (graft.Tables) does —
-    * ONE copy of that rule for the streaming side.
+  /** Derive the stream schema from a batch footer read of the staged
+    * dir, open a one-file-per-batch readStream, and normalize the
+    * corpus' nanos-long `ts` to a microsecond TimestampType exactly as
+    * the batch loader (graft.Tables) does — ONE copy of that rule for
+    * the streaming side.
     */
-  private def schemaRead(spark: SparkSession, dir: String,
-      maxFilesPerTrigger: Option[String]): DataFrame = {
+  private def schemaRead(spark: SparkSession, dir: String): DataFrame = {
     val batchSchema = spark.read.parquet(dir).schema
-    val reader = spark.readStream.schema(batchSchema)
-    val raw = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
+    val raw = spark.readStream.schema(batchSchema)
+      .option("maxFilesPerTrigger", "1")
       .parquet(dir)
     // sources without a ts column (e.g. edge streams) pass through
     if (batchSchema.fieldNames.contains("ts") &&
@@ -200,23 +199,30 @@ object Staging {
     else raw
   }
 
-  def stageAndRead(spark: SparkSession, srcParquet: String,
-      prefix: String): (DataFrame, String) = {
-    val tag = spark.sparkContext.applicationId
-      .replaceAll("[^a-zA-Z0-9]", "_") + "_" + counter.incrementAndGet()
-    val tmp = System.getProperty("java.io.tmpdir")
-    val inDir = Paths.get(graft.Scratch.register(s"$tmp/${prefix}_$tag"))
-    Files.createDirectories(inDir)
-    Files.copy(Paths.get(srcParquet), inDir.resolve("part-0.parquet"),
-      StandardCopyOption.REPLACE_EXISTING)
+  /** The one run path: start `in` in output `mode` on the sink that
+    * `sink` configures, under `Trigger.AvailableNow`, and return once
+    * the query has drained its input and stopped.
+    */
+  private def drain(in: DataFrame, mode: String)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit =
+    sink(in.writeStream.outputMode(mode))
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
 
-    (schemaRead(spark, inDir.toString, maxFilesPerTrigger = None), tag)
+  /** Drain `in` in output `mode` into the memory table `name` and
+    * return that table.
+    */
+  def toMemory(in: DataFrame, mode: String, name: String): DataFrame = {
+    drain(in, mode)(_.format("memory").queryName(name))
+    in.sparkSession.table(name)
   }
 
   /** The one fold skeleton every versioned-store gate runs: drain `in`
-    * to completion (append mode, `Trigger.AvailableNow`, one job per
+    * to completion (output `mode`, append unless given, one job per
     * micro-batch) and call `fold(batch, batchId)` for each NON-EMPTY
-    * micro-batch only — a staged split can cut an empty chunk.
+    * micro-batch only — a staged split can cut an empty chunk, and a
+    * watermark-closing batch can emit nothing.
     *
     * The restart contract, shared by every gate's `runInto`:
     *  - resume: `checkpoint` records the consumed offsets, so a call
@@ -229,17 +235,13 @@ object Staging {
     *    own `batchId` and overwrites only version `batchId` — the
     *    read-below-own-id / overwrite-own-id rule.
     */
-  def foldEach(in: DataFrame, checkpoint: String)(
+  def foldEach(in: DataFrame, checkpoint: String, mode: String = "append")(
       fold: (DataFrame, Long) => Unit): Unit =
-    in.writeStream
-      .outputMode("append")
+    drain(in, mode)(_
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) fold(batch, batchId)
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
+      .option("checkpointLocation", checkpoint))
 
   /** A gate's whole run: stage `src` as `chunks` micro-batches
     * (prefix `graft_<name>_in`), register the state root

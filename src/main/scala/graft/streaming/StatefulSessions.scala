@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Custom stateful streaming (SURVEY §2.10 extension): gap-based
   * sessionization over an event stream with
@@ -34,7 +34,7 @@ object StatefulSessions {
     * `lastMs` never rewinds, so the assignment stays deterministic and
     * monotone: a late straggler extends the session it logically
     * belongs near, it can never re-open or renumber a closed one.
-    * (With a single staged file — the engine's Staging default — every
+    * (With one staged chunk, as [[sessionSummaries]] stages, every
     * event is in batch one and this path never fires.)
     */
   def assign(gapMs: Long)(userId: Long, events: Iterator[Ev],
@@ -52,34 +52,24 @@ object StatefulSessions {
   }
 
   /** Sessionize a parquet-file event stream to completion
-    * (Trigger.AvailableNow) and return per-session summaries.
+    * ([[Staging.toMemory]]) and return per-session summaries.
     */
   def sessionSummaries(spark: SparkSession, srcParquet: String,
       gapMs: Long): DataFrame =
       Staging.withStreamShufflePartitions(spark) {
     import spark.implicits._
-    val (stream, tag) = Staging.stageAndRead(spark, srcParquet,
-      "graft_sess_in")
+    val (stream, tag) = Staging.stageSplitAndRead(spark, srcParquet,
+      "graft_sess_in", chunks = 1)
     val events = stream
       .withColumn("ms", unix_millis(col("ts")))
       .select(col("user_id").cast("long"), col("event_id").cast("long"),
         col("ms"))
       .as[Ev]
-
-    val qn = s"graft_sess_$tag"
-    val query = events
+    val sessions = events
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(assign(gapMs))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(qn)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-
-    spark.table(qn)
+    Staging.toMemory(sessions.toDF(), "append", s"graft_sess_$tag")
       .groupBy("user_id", "session_idx")
       .agg(count(lit(1)).as("n_events"),
         min("ms").as("session_start_ms"), max("ms").as("session_end_ms"))

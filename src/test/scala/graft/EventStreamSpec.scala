@@ -328,4 +328,155 @@ class EventStreamSpec extends AnyFunSuite {
       (1L, -1L, -1L),
       (2L, 3L, 5 * min)))
   }
+
+  /** Write `df` as ONE parquet file and return its path — the
+    * single-file source every EventStream entry point stages from.
+    */
+  private def oneFile(df: org.apache.spark.sql.DataFrame,
+      name: String): String = {
+    val dir = Scratch.register(
+      Files.createTempDirectory(s"graft_es_$name").toString)
+    df.coalesce(1).write.parquet(s"$dir/src")
+    new java.io.File(s"$dir/src").listFiles()
+      .filter(_.getName.endsWith(".parquet")).head.getAbsolutePath
+  }
+
+  /** ~4 hours of clicks and views, 7 s off every window boundary so no
+    * window end ties a watermark.
+    */
+  private def windowFixture: org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    (0 until 48).map { i =>
+      (i.toLong, (i % 5).toLong, if (i % 3 == 0) "view" else "click",
+        i * 5 * min + 7000)
+    }.toDF("event_id", "user_id", "event_type", "ms")
+      .withColumn("ts", timestamp_millis(col("ms"))).drop("ms")
+  }
+
+  /** Batch restatement of the windowed count: 10-minute windows per
+    * event_type, optionally only those whose end is at or before
+    * `closedBy` (the final watermark).
+    */
+  private def batchWindowCounts(src: org.apache.spark.sql.DataFrame,
+      closedBy: Option[Long]): Map[(Long, String), Long] = {
+    val all = src
+      .groupBy(window(col("ts"), "10 minutes"), col("event_type"))
+      .count()
+    closedBy.fold(all)(wm => all.filter(unix_millis(col("window.end")) <= wm))
+      .select(unix_millis(col("window.start")), col("event_type"),
+        col("count"))
+      .collect()
+      .map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
+  }
+
+  private def windowMap(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2))
+      .toMap
+
+  test("sessionWindowCounts (q167): closed sessions equal a batch " +
+      "gaps-and-islands restatement") {
+    import spark.implicits._
+    // per-user event minutes; a gap of 30 min or more opens a session
+    val byUser = Map(
+      1L -> Seq(0L, 10L, 25L, 70L, 80L, 200L),
+      2L -> Seq(5L, 60L, 89L, 118L, 150L),
+      3L -> Seq(40L, 41L, 42L, 300L))
+    val rows = byUser.toSeq.flatMap { case (u, ms) =>
+      ms.map(m => (u, m * min + 7000 + u * 1000))
+    }.zipWithIndex.map { case ((u, ms), i) => (i.toLong, u, "click", ms) }
+    val src = rows.toDF("event_id", "user_id", "event_type", "ms")
+      .withColumn("ts", timestamp_millis(col("ms"))).drop("ms")
+
+    val got = EventStream.sessionWindowCounts(spark, oneFile(src, "sesswin"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+
+    val gap = 30 * min
+    val watermark = rows.map(_._4).max - 60 * min
+    val want = rows.groupBy(_._2).toSeq.flatMap { case (u, evs) =>
+      val ms = evs.map(_._4).sorted
+      val sessions = ms.tail.foldLeft(List(List(ms.head))) {
+        case (cur :: done, t) =>
+          if (t - cur.head >= gap) List(t) :: cur :: done
+          else (t :: cur) :: done
+        case (Nil, t) => List(List(t))
+      }
+      sessions.map { s =>
+        val end = s.head + gap
+        assert(end != watermark, "fixture must not tie the watermark")
+        (s.last, u, s.size.toLong, end)
+      }
+    }.filter(_._4 <= watermark).map(t => (t._1, t._2, t._3)).toSet
+
+    assert(want.nonEmpty && want.size < rows.size)
+    assert(got === want)
+  }
+
+  test("windowedCountsToParquet (q58): read-back equals the late-filtered " +
+      "batch result") {
+    val src = windowFixture
+    val maxMs = 47 * 5 * min + 7000
+    val got = windowMap(EventStream.windowedCountsToParquet(spark,
+      oneFile(src, "fbsink")))
+    val want = batchWindowCounts(src, Some(maxMs - 60 * min))
+    assert(want.nonEmpty)
+    assert(got === want)
+  }
+
+  test("windowedCountsToParquet (q58): a stream that closes no window " +
+      "returns an empty frame with the three-column schema") {
+    import spark.implicits._
+    // 20 minutes of events: the final watermark (max - 1 h) lies before
+    // every window end, so append mode emits nothing
+    val src = (0 until 5).map(i => (i.toLong, "click", i * 5 * min + 7000))
+      .toDF("event_id", "event_type", "ms")
+      .withColumn("ts", timestamp_millis(col("ms"))).drop("ms")
+    val got = EventStream.windowedCountsToParquet(spark,
+      oneFile(src, "fbsink_empty"))
+    assert(got.count() === 0L)
+    assert(got.schema.map(f => f.name -> f.dataType) === Seq(
+      "window_start_ms" -> org.apache.spark.sql.types.LongType,
+      "event_type" -> org.apache.spark.sql.types.StringType,
+      "n_events" -> org.apache.spark.sql.types.LongType))
+  }
+
+  test("windowedCountsComplete (q114): equals the batch count over every " +
+      "window, open ones included") {
+    val src = windowFixture
+    val got = windowMap(EventStream.windowedCountsComplete(spark,
+      oneFile(src, "complete")))
+    assert(got === batchWindowCounts(src, None))
+  }
+
+  test("windowedCountsUpdate (q122): the merged upsert over 3 micro-batches " +
+      "equals the batch count over every window") {
+    val src = windowFixture
+    val got = windowMap(EventStream.windowedCountsUpdate(spark,
+      oneFile(src, "upd"), chunks = 3))
+    assert(got === batchWindowCounts(src, None))
+  }
+
+  test("Staging.toMemory returns the drained table with no query left " +
+      "running") {
+    val src = windowFixture
+    val (events, tag) = graft.streaming.Staging.stageSplitAndRead(spark,
+      oneFile(src, "tomem"), "graft_tomem_spec", chunks = 2)
+    val got = graft.streaming.Staging.toMemory(
+      events.select("event_id"), "append", s"graft_tomem_spec_$tag")
+    assert(spark.streams.active.isEmpty)
+    assert(got.collect().map(_.getLong(0)).sorted.toSeq ===
+      (0L until 48L))
+  }
+
+  test("streamDedup reads a one-chunk source without ts or event_id " +
+      "columns: rows equal the batch distinct") {
+    import spark.implicits._
+    val src = (0 until 30).map(i => ((i % 4).toLong,
+      if (i % 3 == 0) "view" else "click")).toDF("user_id", "event_type")
+    val got = EventStream.streamDedup(spark, oneFile(src, "dedup_nots"))
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    val want = src.distinct().collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
+    assert(want.size === 8)
+    assert(got === want)
+  }
 }

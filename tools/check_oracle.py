@@ -3,8 +3,14 @@
 parquet dumps against the DuckDB oracle SQL and compare exactly.
 
 Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
+
+SPARK_GRAFT_ONLY (comma-separated query-name prefixes, as graft.Verify
+reads it) restricts the check to the matching queries; unset, every
+query in oracle_sql.json is checked. A filtered run says so in its
+summary line, and fails when a prefix matches no query.
 """
 import json
+import os
 import sys
 
 import duckdb
@@ -28,6 +34,15 @@ def main() -> int:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    n_all = len(oracle)
+    only = os.environ.get("SPARK_GRAFT_ONLY")
+    unmatched = []
+    if only is not None:
+        prefixes = [p for p in only.split(",") if p]
+        unmatched = [p for p in prefixes
+                     if not any(k.startswith(p) for k in oracle)]
+        oracle = {k: v for k, v in oracle.items()
+                  if k.startswith(tuple(prefixes))}
     n_bad = 0
     for name, sql in sorted(oracle.items()):
         try:
@@ -76,8 +91,12 @@ def main() -> int:
             n_bad += 1
         else:
             print(f"PASS {name} ({len(g)} rows)")
-    print(f"\n{len(oracle) - n_bad}/{len(oracle)} queries match")
-    return 1 if n_bad else 0
+    for p in unmatched:
+        print(f"FAIL SPARK_GRAFT_ONLY prefix {p!r} matches no query")
+    scope = ("" if only is None else
+             f" (filtered by SPARK_GRAFT_ONLY: {len(oracle)} of {n_all})")
+    print(f"\n{len(oracle) - n_bad}/{len(oracle)} queries match{scope}")
+    return 1 if n_bad or unmatched or not oracle else 0
 
 
 if __name__ == "__main__":
